@@ -27,16 +27,17 @@ behaviors pinned by tests in ``tests/test_transform.py``:
   custom registry.
 
 At scale this whole operator is a zero-shuffle narrow Project over whatever
-partitioning the input already has; Catalyst's ``OptimizeUpdateFields``
-collapses the chained ``UpdateFields`` nodes and whole-stage codegen fuses the
-expression tree, so cost is O(touched leaves) per row regardless of table
-width.
+partitioning the input already has. The lowering reads every struct member
+from the value before its rewrite, so the analysed expression tree is linear
+in the number of touched leaves; untouched columns never enter it. That
+bound has to hold at analysis: ``OptimizeUpdateFields`` collapses chained
+``UpdateFields`` nodes only in the optimizer, after the analyser has walked
+the whole tree.
 """
 
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field as dc_field
 from typing import Union
 
 from pyspark.sql import Column, DataFrame
@@ -49,7 +50,11 @@ from config_driven_pyspark_spark.functions.registry import (
     compose,
 )
 from config_driven_pyspark_spark.plans.lowering import lower_root
-from config_driven_pyspark_spark.plans.path_tree import build_path_tree, resolve_tokens
+from config_driven_pyspark_spark.plans.path_tree import (
+    PathNode,
+    build_path_tree,
+    resolve_tokens,
+)
 from config_driven_pyspark_spark.schema import flatten_schema, strip_brackets, wrappers_of
 
 _transform_logger = logging.getLogger(__name__)
@@ -115,30 +120,6 @@ class NestedTransformer:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class _DropNode:
-    wrappers: tuple[str, ...] = ()
-    children: dict[str, "_DropNode"] = dc_field(default_factory=dict)
-    drops: list[str] = dc_field(default_factory=list)
-
-
-def _drop_value(ctx: Column, node: _DropNode) -> Column:
-    for leaf in node.drops:
-        ctx = ctx.dropFields(leaf)
-    for name, child in node.children.items():
-        ctx = ctx.withField(name, _drop_wrap(ctx.getField(name), child.wrappers, child))
-    return ctx
-
-
-def _drop_wrap(ctx: Column, wrappers: tuple[str, ...], node: _DropNode) -> Column:
-    if not wrappers:
-        return _drop_value(ctx, node)
-    head, rest = wrappers[0], wrappers[1:]
-    if head == "a":
-        return F.transform(ctx, lambda element: _drop_wrap(element, rest, node))
-    return F.transform_values(ctx, lambda _k, value: _drop_wrap(value, rest, node))
-
-
 def drop_nested(df: DataFrame, paths: list[str]) -> DataFrame:
     """Drop columns OR nested struct fields by flattened path, in one
     ``select``.
@@ -156,8 +137,9 @@ def drop_nested(df: DataFrame, paths: list[str]) -> DataFrame:
     else references them.
     """
     flat = flatten_schema(df)
-    root = _DropNode()
-    top_level: set[str] = set()
+    root = PathNode("<root>")
+    # parent path (lowercased names; () for the top level) → leaves to drop
+    drops: dict[tuple[str, ...], list[str]] = {}
     for path in paths:
         tokens = resolve_tokens(path, flat)
         if tokens is None:
@@ -165,31 +147,28 @@ def drop_nested(df: DataFrame, paths: list[str]) -> DataFrame:
                 "Field %s not found in input schema; nothing to drop.", path
             )
             continue
-        segments = tokens.split(".")
-        if len(segments) == 1:
-            top_level.add(strip_brackets(segments[0]).lower())
-            continue
-        current = root
-        for segment in segments[:-1]:
-            name = strip_brackets(segment)
-            node = current.children.get(name)
-            if node is None:
-                node = current.children[name] = _DropNode(wrappers_of(segment))
-            current = node
-        current.drops.append(strip_brackets(segments[-1]))
+        *parents, leaf = tokens.split(".")
+        node = root
+        for segment in parents:
+            node = node.put_child(PathNode(strip_brackets(segment), wrappers_of(segment)))
+        key = tuple(strip_brackets(s).lower() for s in parents)
+        drops.setdefault(key, []).append(strip_brackets(leaf))
 
-    # prune drop subtrees under roots that are dropped wholesale
-    select_cols: list[Column] = []
-    for col_name in df.columns:
-        if col_name.lower() in top_level:
+    # a dropped struct takes its drop subtree with it, whatever the path order
+    for parent, leaves in drops.items():
+        node = root
+        for name in parent:
+            node = node.child(name) if node is not None else None
+        if node is None:  # an ancestor struct is itself dropped
             continue
-        node = root.children.get(col_name) or next(
-            (n for k, n in root.children.items() if k.lower() == col_name.lower()),
-            None,
-        )
-        if node is None:
-            select_cols.append(F.col(col_name))
-        else:
-            ctx = _drop_wrap(F.col(col_name), node.wrappers, node)
-            select_cols.append(ctx.alias(col_name))
-    return df.select(*select_cols)
+        for leaf in leaves:
+            node.children.pop(leaf.lower(), None)
+        if parent:
+            node.function = lambda c, leaves=leaves: c.dropFields(*leaves)
+
+    dropped_roots = {leaf.lower() for leaf in drops.get((), [])}
+    return df.select(*(
+        lower_root(F.col(c), root.child(c)).alias(c)
+        for c in df.columns
+        if c.lower() not in dropped_roots
+    ))

@@ -17,6 +17,12 @@ Plan-shape choices, both deliberate:
   higher-order function); paths continue into the map's value type. Wrapper
   order is preserved: ``array<map<T>>`` nests ``transform(transform_values)``.
 
+- Struct members are read from the value *before* the node's rewrite,
+  never from the partially rebuilt ``withField`` chain, so the analysed
+  expression grows linearly with the number of touched leaves (see
+  ``_apply_at_value``). ``drop_nested`` lowers through the same walker, with
+  each parent's drops as its node function.
+
 Untouched columns and untouched struct subtrees never enter the plan:
 roots without a PathNode pass through as bare ``F.col`` (parity with
 ``functioniser.py:91-93``; ``README.md:92``).
@@ -39,12 +45,20 @@ def _apply_at_value(ctx: Column, node: PathNode) -> Column:
     Child order: children first, then the node's own function, so a function
     configured on a struct path sees its transformed members (matches the
     reference's ``_apply`` tail order, ``functioniser.py:95-112``).
+
+    Every child is read from ``ctx`` — the value before this node's rewrite —
+    and the ``withField`` chain grows in a separate accumulator. Reading a
+    sibling back out of the growing chain instead would embed the whole chain
+    twice per sibling and double the analysed tree with each one; reading
+    from ``ctx`` yields the same values (member names are distinct, so no
+    earlier ``withField`` could have changed the member being read).
     """
+    out = ctx
     for child in node.children.values():
-        ctx = ctx.withField(child.name, _lower_node(ctx.getField(child.name), child))
+        out = out.withField(child.name, _lower_node(ctx.getField(child.name), child))
     if node.function is not None:
-        ctx = node.function(ctx)
-    return ctx
+        out = node.function(out)
+    return out
 
 
 def _wrap_levels(

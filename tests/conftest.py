@@ -1,4 +1,4 @@
-"""Shared Spark session + JSON-literal fixture helper.
+"""Shared Spark session, JSON-literal fixture and plan-size helpers.
 
 Fixture style mirrors the reference's test harness
 (``/root/reference/test/conftest.py:7-19``): a session-scoped local
@@ -38,3 +38,12 @@ def to_df(spark: SparkSession, data) -> DataFrame:
     return spark.read.json(
         spark.sparkContext.parallelize([json.dumps(row) for row in data])
     )
+
+
+def analyzed_expr_size(df: DataFrame) -> int:
+    """Node count of the analysed plan's top-level expressions (each tree
+    walked with ``TreeNode.map``). Analysis only — no Spark job."""
+    predef = getattr(getattr(df.sparkSession._jvm.scala, "Predef$"), "MODULE$")
+    identity = getattr(predef, "$conforms")()
+    exprs = df._jdf.queryExecution().analyzed().expressions()
+    return sum(int(exprs.apply(i).map(identity).size()) for i in range(exprs.size()))

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from config_driven_pyspark_spark import Pipeline
 from config_driven_pyspark_spark.operators.transform import drop_nested
-from tests.conftest import to_df
+from tests.conftest import analyzed_expr_size, to_df
 
 FIXTURE = [{
     "id": 1,
@@ -53,6 +53,30 @@ def test_drop_deep_and_inside_arrays(spark):
     # untouched siblings intact, both array elements rebuilt
     assert [p["face"]["eyes"][0]["colour"] for p in row["pets"]] == ["blue", "green"]
     assert [p["age"] for p in row["pets"]] == [3, 5]
+
+
+@pytest.mark.parametrize(
+    "paths",
+    [["info.c", "info.c.x"], ["info.c.x", "info.c"], ["pets.face", "pets.face.eyes.size"]],
+    ids=["struct_first", "leaf_first", "inside_array"],
+)
+def test_drop_struct_and_leaf_inside_it(spark, paths):
+    # the dropped struct takes the drop of its own member with it, in either
+    # path order and at any depth
+    df = to_df(spark, FIXTURE)
+    names = _flat_names(drop_nested(df, paths).schema)
+    dropped = min(paths, key=len)
+    assert not any(n == dropped or n.startswith(dropped + ".") for n in names)
+    assert "info.a" in names and "pets.name" in names
+
+
+def test_drop_plan_size_linear_in_sibling_structs(spark):
+    def size(width):
+        subs = ", ".join(f"c{i}: struct<x: int, y: int>" for i in range(width))
+        df = spark.createDataFrame([], f"s struct<{subs}>")
+        return analyzed_expr_size(drop_nested(df, [f"s.c{i}.y" for i in range(width)]))
+
+    assert size(16) <= 2.5 * size(8)
 
 
 def test_drop_case_insensitive(spark):

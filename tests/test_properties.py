@@ -1,17 +1,19 @@
 """Property-based tests (hypothesis) for invariants golden tests can't pin:
 chunk reconstruction over arbitrary document lengths, hash-sample
-monotonicity, nested-drop isolation. Example counts are kept small because
+monotonicity, nested-drop isolation, NestedTransformer against a
+pure-Python evaluator. Example counts are kept small because
 each example runs a Spark job."""
 
 from __future__ import annotations
 
 import json
+import math
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from config_driven_pyspark_spark.operators import corpus as C
-from config_driven_pyspark_spark.operators.transform import drop_nested
+from config_driven_pyspark_spark.operators.transform import NestedTransformer, drop_nested
 
 SETTINGS = dict(max_examples=8, deadline=None)
 
@@ -75,6 +77,94 @@ def test_drop_nested_isolation(spark, drop_b, drop_junk, drop_size):
     assert row["pets"][0]["face"]["eyes"][0]["colour"] == "blue"
     info_fields = set(row["info"].asDict())
     assert ("b" in info_fields) == (not drop_b)
+
+
+# leaf function name → (leaf type, pure-Python evaluation of the Spark builtin)
+_LEAF_FNS = {
+    "upper": ("string", str.upper),
+    "negative": ("double", lambda v: -v),
+    "abs": ("double", abs),
+    # Spark's round is HALF_UP, Python's is half-to-even
+    "round": ("double", lambda v: math.copysign(math.floor(abs(v) + 0.5), v)),
+}
+
+
+@st.composite
+def _nested_case(draw):
+    """A struct ``s`` of 1–6 leaves, optionally holding a struct ``inner``
+    and an array of structs ``items`` (each 1–6 leaves), a random subset of
+    leaves touched, and two rows of values (nulls included)."""
+
+    def leaves(prefix):
+        return [
+            (f"{prefix}{i}", draw(st.sampled_from(sorted(_LEAF_FNS))), draw(st.booleans()))
+            for i in range(draw(st.integers(1, 6)))
+        ]
+
+    top = {"": leaves("f")}
+    if draw(st.booleans()):
+        top["inner"] = leaves("g")
+    if draw(st.booleans()):
+        top["items"] = leaves("h")
+
+    def value(fn):
+        if _LEAF_FNS[fn][0] == "string":
+            return draw(st.none() | st.text("abXY z", max_size=3))
+        return draw(st.none() | st.integers(-12, 12).map(lambda k: k / 4))
+
+    def struct(group):
+        return {name: value(fn) for name, fn, _ in group}
+
+    rows = []
+    for row_id in range(2):
+        s = struct(top[""])
+        if "inner" in top:
+            s["inner"] = struct(top["inner"])
+        if "items" in top:
+            s["items"] = [struct(top["items"]) for _ in range(draw(st.integers(0, 2)))]
+        rows.append({"id": row_id, "s": s})
+    return top, rows
+
+
+def _leaf_ddl(group):
+    return ", ".join(f"{name}: {_LEAF_FNS[fn][0]}" for name, fn, _ in group)
+
+
+def _expect(struct, group):
+    for name, fn, touched in group:
+        if touched and struct[name] is not None:
+            struct[name] = _LEAF_FNS[fn][1](struct[name])
+
+
+@given(case=_nested_case())
+@settings(max_examples=8, deadline=None, derandomize=True)
+def test_nested_transformer_matches_python_evaluator(spark, case):
+    top, rows = case
+    members = [_leaf_ddl(top[""])]
+    if "inner" in top:
+        members.append(f"inner: struct<{_leaf_ddl(top['inner'])}>")
+    if "items" in top:
+        members.append(f"items: array<struct<{_leaf_ddl(top['items'])}>>")
+    df = spark.createDataFrame(rows, f"id long, s struct<{', '.join(members)}>")
+
+    engine = NestedTransformer()
+    for key, group in top.items():
+        prefix = f"s.{key}." if key else "s."
+        for name, fn, touched in group:
+            if touched:
+                engine.add(prefix + name, fn)
+    got = sorted(
+        (r.asDict(recursive=True) for r in engine.apply(df).collect()),
+        key=lambda r: r["id"],
+    )
+
+    for row in rows:
+        _expect(row["s"], top[""])
+        if "inner" in top:
+            _expect(row["s"]["inner"], top["inner"])
+        for item in row["s"].get("items", []):
+            _expect(item, top["items"])
+    assert got == rows
 
 
 # -- shared fixture ----------------------------------------------------------

@@ -15,7 +15,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from config_driven_pyspark_spark import NestedTransformer
-from tests.conftest import to_df
+from tests.conftest import analyzed_expr_size, to_df
 
 
 PEOPLE = [
@@ -419,3 +419,24 @@ def test_readme_yaml_example_config_drives_pipeline(spark):
     assert row["a"] == "padded"
     assert row["b"] == "long"
     assert row["c"] == "foo"
+
+
+@pytest.mark.parametrize(
+    "wrap",
+    ["{}", "array<{}>", "map<string, {}>"],
+    ids=["struct", "array_of_struct", "map_of_struct"],
+)
+def test_plan_size_linear_in_touched_siblings(spark, wrap):
+    """The analysed expression grows linearly with touched siblings: each
+    member is read from the struct before its rewrite, never back out of the
+    growing ``withField`` chain (which doubled the tree per sibling)."""
+
+    def size(width):
+        members = ", ".join(f"f{i}: string" for i in range(width))
+        df = spark.createDataFrame([], f"s {wrap.format(f'struct<{members}>')}")
+        engine = NestedTransformer()
+        for i in range(width):
+            engine.add(f"s.f{i}", "upper")
+        return analyzed_expr_size(engine.apply(df))
+
+    assert size(16) <= 2.5 * size(8)
