@@ -418,6 +418,7 @@ def main() -> None:
         "sf": sf,
         "total": total,
         "fingerprint": fingerprints,
+        "cpus": int(cpus),
         "commits": [c for c in [_git_head()] if c],
     }
     try:
@@ -475,24 +476,45 @@ def _tmean(xs: list[float]) -> float:
     return round(sum(vals) / len(vals), 3)
 
 
-def _query_fingerprints(queries: dict, names: list[str]) -> dict[str, str]:
-    """Per-query code fingerprint (md5 of the query function's own
-    source): merge_detail only carries a query's historical minimum
-    forward while its fingerprint is unchanged, so an all-time floor
-    recorded against OLD code can never mask a regression introduced by
-    editing the query. Package-internal changes don't move the
-    fingerprint — those are watched by the per-round BENCH_r{N} ratio
-    and settled with scripts/ab_query.py (the PLANS.md protocol)."""
+def _engine_hash(root: str | None = None) -> str:
+    """md5 over every file of the engine package (relative path + bytes,
+    compiled caches skipped)."""
+    import hashlib
+
+    root = root or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "config_driven_pyspark_spark"
+    )
+    paths = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if x != "__pycache__"]
+        paths += [os.path.join(d, f) for f in files]
+    h = hashlib.md5()
+    for path in sorted(paths):
+        h.update(os.path.relpath(path, root).encode())
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
+
+
+def _query_fingerprints(
+    queries: dict, names: list[str], engine: str | None = None
+) -> dict[str, str]:
+    """Per-query code fingerprint: md5 of the query function's own source
+    plus the engine package's hash. merge_detail only carries a query's
+    historical minimum forward while its fingerprint is unchanged, so an
+    all-time floor recorded against OLD code — the query's or the
+    engine's — can never mask a regression."""
     import hashlib
     import inspect
 
+    engine = engine or _engine_hash()
     out = {}
     for name in names:
         try:
             src = inspect.getsource(queries[name])
         except (OSError, TypeError):
             src = name  # builtins/lambdas: fall back to a stable token
-        out[name] = hashlib.md5(src.encode()).hexdigest()[:12]
+        out[name] = hashlib.md5((src + engine).encode()).hexdigest()[:12]
     return out
 
 
@@ -537,8 +559,13 @@ def merge_detail(old: dict | None, new: dict) -> dict:
     permanently mask a regression) — a query whose fingerprint changed
     starts a fresh history from this run. Records written before
     fingerprints existed merge as before (their floors predate any r11+
-    query edit)."""
-    if not old or not isinstance(old.get("min"), dict):
+    query edit). A record taken on a different core count (``cpus``)
+    carries nothing forward: its floors time other hardware."""
+    if (
+        not old
+        or not isinstance(old.get("min"), dict)
+        or old.get("cpus") != new.get("cpus")
+    ):
         return new
     runs: dict[str, list[float]] = {}
     mins: dict[str, float] = {}
@@ -593,6 +620,7 @@ def merge_detail(old: dict | None, new: dict) -> dict:
         "sf": new.get("sf"),
         "total": round(sum(mins.values()), 3),
         "fingerprint": {**old_fp, **new_fp},
+        "cpus": new.get("cpus"),
         "commits": commits[-20:],
     }
 

@@ -1,36 +1,85 @@
 """Vector Column functions — dot product, norms, cosine, hashing families.
 
 All pure Column expressions (``zip_with`` / ``aggregate`` higher-order
-functions), evaluated JVM-side inside whole-stage codegen — no Python UDFs,
-so they hold up on billions of vectors. Computation is in double precision
-regardless of storage type (embeddings parquet stores float32) so results
-match a double-precision oracle.
+functions, or their unrolled whole-stage-codegen equivalents), evaluated
+JVM-side — no Python UDFs, so they hold up on billions of vectors.
+Computation is in double precision regardless of storage type
+(embeddings parquet stores float32) so results match a double-precision
+oracle.
+
+The unrolled builders (``dot`` with ``dim=``, ``hyperplane_signature``)
+emit ONE SQL string for ``F.expr`` (three py4j calls; a Column built node
+by node cost thousands), so they take column NAMES or float literals.
 """
 
 from __future__ import annotations
 
+import math
+from typing import Sequence, Union
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# a vector operand of the SQL-text builders: column name or float literals
+Vec = Union[str, Sequence[float]]
 
 
 def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
 
 
-# Above this many components the unrolled dot's expression tree stops
-# paying for itself (codegen method size, planning time); the HOF path
-# takes over. 256 covers every embedding dim the engine ships.
+# Above this many components the unrolled dot's generated code stops
+# paying for itself (method size; py4j build calls do not grow with width);
+# the HOF path takes over. 256 covers every embedding dim the engine ships.
 _UNROLL_CAP = 256
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def _sql(v: Vec) -> str:
+    """A column reference back-quoted per ``.`` part (``"x.v"`` resolves
+    like ``F.col("x.v")``), or an ``array`` of double literals."""
+    if isinstance(v, str):
+        return ".".join("`" + p.replace("`", "``") + "`" for p in v.split("."))
+    return f"array({', '.join(_double(x) for x in v)})"
+
+
+def _double(x: float) -> str:
+    """A double literal Spark parses back to the identical value (``repr``
+    is the shortest round-tripping decimal)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _element(v: Vec, i: int) -> str:
+    if isinstance(v, str):
+        return f"CAST(element_at({_sql(v)}, {i}) AS DOUBLE)"
+    return _double(v[i - 1])
+
+
+def _hof_sql(a: Vec, b: Vec) -> str:
+    return (
+        f"aggregate(zip_with(CAST({_sql(a)} AS ARRAY<DOUBLE>), "
+        f"CAST({_sql(b)} AS ARRAY<DOUBLE>), (x, y) -> x * y), "
+        "0.0D, (acc, p) -> acc + p)"
+    )
+
+
+def _unrolled_sql(a: Vec, b: Vec, dim: int) -> str:
+    """``((0.0 + a₁·b₁) + a₂·b₂) + …`` — the fold's exact order, no size
+    guard (callers must guard; out-of-range ``element_at`` raises under
+    ANSI). Elements cast to double individually: float→double widening
+    is exact, so this equals the whole-array cast."""
+    terms = [f"{_element(a, i)} * {_element(b, i)}" for i in range(1, dim + 1)]
+    return " + ".join(["0.0D", *terms])
+
+
+def dot(a: Column | Vec, b: Column | Vec, dim: int | None = None) -> Column:
     """Σ aᵢ·bᵢ with left-to-right summation.
 
     Default path: ``zip_with`` + ``aggregate``. Higher-order functions
     are CodegenFallback in Spark 4 — every pair pays an interpreted
     64-step fold plus a zipped-array allocation, which dominates
     brute-force / bucket-pair scoring (measured 2.4× on 2M 64-dim
-    pairs, r16).
+    pairs, r16). ``a``/``b`` may be Columns here.
 
     When the caller knows the vector width, ``dim`` switches to an
     UNROLLED whole-stage-codegen sum ``((0.0 + a₁·b₁) + a₂·b₂) + …`` —
@@ -38,37 +87,33 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     bit-identical (pinned by tests/test_featurize.py). A size guard
     keeps the HOF semantics for rows whose arrays are not ``dim`` wide
     (NULL arrays short-circuit the guard to the HOF branch, which
-    returns NULL exactly like before).
+    returns NULL exactly like before). The guard, sum and fallback are
+    one SQL expression, so ``a``/``b`` must be column names or literal
+    float sequences (a literal whose length is not ``dim`` takes the HOF
+    path). The py4j calls to build it do not grow with ``dim``.
     """
-    ad, bd = as_double(a), as_double(b)
-    hof = F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    if dim is None or not (0 < dim <= _UNROLL_CAP):
-        return hof
-    return F.when(
-        (F.size(a) == dim) & (F.size(b) == dim),
-        _unrolled_sum(a, b, dim),
-    ).otherwise(hof)
-
-
-def _unrolled_sum(a: Column, b: Column, dim: int) -> Column:
-    """``((0.0 + a₁·b₁) + a₂·b₂) + …`` — the fold's exact order, no size
-    guard (callers must guard; out-of-range ``element_at`` raises under
-    ANSI). Elements cast to double INDIVIDUALLY — value-identical to the
-    HOF path's whole-array cast (float→double widening is exact) without
-    re-materializing the cast array per component. Pass plain column
-    references, not expressions: ``element_at`` re-evaluates its child
-    per component."""
-    s: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        s = s + (
-            F.element_at(a, i).cast("double")
-            * F.element_at(b, i).cast("double")
+    unroll = dim is not None and 0 < dim <= _UNROLL_CAP
+    if isinstance(a, Column) or isinstance(b, Column):
+        if unroll:
+            raise TypeError(
+                "dot(..., dim=) builds SQL text: pass column names or "
+                "float lists, not Columns"
+            )
+        return F.aggregate(
+            F.zip_with(as_double(a), as_double(b), lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
         )
-    return s
+    hof = _hof_sql(a, b)
+    if not unroll or any(len(v) != dim for v in (a, b) if not isinstance(v, str)):
+        return F.expr(hof)
+    guard = " AND ".join(
+        f"size({_sql(v)}) = {dim}" for v in (a, b) if isinstance(v, str)
+    )
+    return F.expr(
+        f"CASE WHEN {guard} THEN {_unrolled_sql(a, b, dim)} "
+        f"ELSE {hof} END"
+    )
 
 
 def norm(a: Column) -> Column:
@@ -102,32 +147,34 @@ def unit_normalize(a: Column) -> Column:
     )
 
 
-def hyperplane_signature(vec: Column, hyperplanes: list[list[float]]) -> Column:
+def _signature_sql(dots: list[str]) -> str:
+    """``sig = sig * 2 + (dotᵢ >= 0)`` folded over the planes, in bigint."""
+    sig = "CAST(0 AS BIGINT)"
+    for d in dots:
+        sig = f"({sig}) * 2 + CASE WHEN ({d}) >= 0 THEN 1 ELSE 0 END"
+    return sig
+
+
+def hyperplane_signature(vec: str, hyperplanes: Sequence[Sequence[float]]) -> Column:
     """Random-hyperplane (SRP) LSH signature: bit i = sign(vec · hᵢ).
 
-    Returns a bigint bucket id. ``hyperplanes`` are driver-side constants
-    (deterministic seed) embedded as literal arrays, so the signature is a
-    pure expression; equal buckets ⇒ likely-high cosine. Used to prune ANN
-    candidate pairs from O(n²) to O(n·bucket_size) at scale.
+    Returns a bigint bucket id. ``vec`` is a column NAME; ``hyperplanes``
+    are driver-side constants (deterministic seed) written as double
+    literals, so the signature is a pure expression; equal buckets ⇒
+    likely-high cosine. Used to prune ANN candidate pairs from O(n²) to
+    O(n·bucket_size) at scale.
+
+    With equal-width planes (≤ ``_UNROLL_CAP``) every bit's dot is
+    unrolled like :func:`dot`'s ``dim=`` path, under ONE outer size guard
+    whose fallback is the HOF signature. Built as one SQL expression:
+    the py4j calls to build it do not grow with width or plane count.
     """
-    vd = as_double(vec)
-
-    def _sig(mk_dot) -> Column:
-        sig = F.lit(0).cast("bigint")
-        for plane in hyperplanes:
-            arr = F.array(*[F.lit(float(x)) for x in plane])
-            bit = F.when(mk_dot(arr, plane) >= 0, 1).otherwise(0)
-            sig = sig * 2 + bit
-        return sig
-
-    hof_sig = _sig(lambda arr, plane: dot(vd, arr))
+    hof = _signature_sql([_hof_sql(vec, p) for p in hyperplanes])
     dims = {len(p) for p in hyperplanes}
     d = dims.pop() if len(dims) == 1 else 0
     if not (0 < d <= _UNROLL_CAP):
-        return hof_sig
-    # plane widths are literal, so ONE outer size guard covers every
-    # bit's unrolled dot (per-bit guards would re-evaluate `vec` when it
-    # is an expression rather than a column reference)
-    return F.when(
-        F.size(vec) == d, _sig(lambda arr, plane: _unrolled_sum(vec, arr, d))
-    ).otherwise(hof_sig)
+        return F.expr(hof)
+    unrolled = _signature_sql([_unrolled_sql(vec, p, d) for p in hyperplanes])
+    return F.expr(
+        f"CASE WHEN size({_sql(vec)}) = {d} THEN {unrolled} ELSE {hof} END"
+    )

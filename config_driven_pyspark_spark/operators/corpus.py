@@ -48,7 +48,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from config_driven_pyspark_spark.functions import text as TX
-from config_driven_pyspark_spark.operators.dedup import _materialize, _spread
+from config_driven_pyspark_spark.operators.dedup import (
+    _materialize,
+    _spread,
+    _vector_dim,
+)
 
 
 def _resolve_percentile_method(op: str, method: str | None) -> str:
@@ -2176,12 +2180,8 @@ def semantic_contamination_flags(
 
     bid = bench_id_col or id_col
     bvec = bench_vec_col or vec_col
-    from config_driven_pyspark_spark.operators.similarity import (
-        _dim_or_none,
-    )
-
     # benchmark-side width probe → unrolled codegen scoring dot (r16)
-    vdim = _dim_or_none(benchmark, bvec)
+    vdim = _vector_dim(benchmark, bvec)
     b = F.broadcast(
         benchmark.select(
             F.col(bid).alias("__bench_id"),
@@ -2198,9 +2198,7 @@ def semantic_contamination_flags(
         .select(
             id_col,
             "__bench_id",
-            F.round(
-                V.dot(F.col("__cv"), F.col("__bv"), vdim), 6
-            ).alias("__cos"),
+            F.round(V.dot("__cv", "__bv", vdim), 6).alias("__cos"),
         )
         .filter(F.col("__cos") >= threshold)
     )

@@ -1348,6 +1348,14 @@ def simhash_pairs(
     return hamming_pairs(codes, "id", "sh", max_hamming)
 
 
+def _vector_dim(df: DataFrame, vec_col: str) -> int | None:
+    """Width of the first NON-NULL vector, or None when there is none —
+    one bounded driver job at plan-build time. Probing an unfiltered
+    first row would let a leading NULL set the width to garbage."""
+    row = df.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
+    return None if row is None else len(row[0])
+
+
 def srp_planes(dim: int, bits: int, seed: int) -> list[list[float]]:
     """Deterministic random-hyperplane set for SRP-LSH — seeded so an
     external oracle can regenerate the identical planes and replicate the
@@ -1414,8 +1422,7 @@ def semdedup(
     assign = kmeans_clusters(df, id_col, vec_col, int(n_clusters), iters)
     # vector width for the unrolled codegen dot (r16): the pair join
     # below scores SUM(|cluster|^2) dots — the operator's hot loop
-    row0 = df.select(vec_col).first()
-    vdim = len(row0[0]) if row0 is not None and row0[0] is not None else None
+    vdim = _vector_dim(df, vec_col)
     unit = _materialize(
         df.select(
             F.col(id_col).alias("id"),
@@ -1441,11 +1448,7 @@ def semdedup(
         sizes = unit.groupBy("cluster").agg(F.count("*").alias("__csz"))
         max_sz = sizes.agg(F.max("__csz")).collect()[0][0] or 0
         if max_sz > max_cluster_size:
-            row = df.select(vec_col).first()
-            dim = (
-                len(row[0]) if row is not None and row[0] is not None else 1
-            )
-            planes = srp_planes(dim, srp_bits, seed)
+            planes = srp_planes(vdim or 1, srp_bits, seed)
             # broadcast the k-row size table back; only OVERSIZED
             # clusters pay the bucket split — the rest keep the exact
             # single-bucket path
@@ -1455,7 +1458,7 @@ def semdedup(
                     "bucket",
                     F.when(
                         F.col("__csz") > max_cluster_size,
-                        V.hyperplane_signature(F.col("u"), planes),
+                        V.hyperplane_signature("u", planes),
                     ).otherwise(F.lit(-1)),
                 )
                 .drop("__csz")
@@ -1471,7 +1474,7 @@ def semdedup(
         a.join(b, join_keys)
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            F.round(V.dot(F.col("ua"), F.col("ub"), vdim), 6) >= threshold
+            F.round(V.dot("ua", "ub", vdim), 6) >= threshold
         )
         .select(F.col("id_b").alias(id_col))
         .distinct()
@@ -1513,12 +1516,11 @@ def embedding_pairs(
         df.select(F.col(id_col).alias("id"), V.unit_normalize(F.col(vec_col)).alias("v"))
     )
     if dim is None:
-        row = df.select(vec_col).first()
         # empty input: any plane set works — the join below yields no rows
-        dim = len(row[0]) if row is not None and row[0] is not None else 1
+        dim = _vector_dim(df, vec_col) or 1
     if lsh_bits > 0:
         planes = srp_planes(dim, lsh_bits, seed)
-        base = base.withColumn("bucket", V.hyperplane_signature(F.col("v"), planes))
+        base = base.withColumn("bucket", V.hyperplane_signature("v", planes))
         joined = base.alias("x").join(base.alias("y"), on=["bucket"])
     else:
         joined = base.alias("x").crossJoin(base.alias("y"))
@@ -1527,9 +1529,7 @@ def embedding_pairs(
         .select(
             F.col("x.id").alias("id_a"),
             F.col("y.id").alias("id_b"),
-            F.round(
-                V.dot(F.col("x.v"), F.col("y.v"), dim), 6
-            ).alias("cosine"),
+            F.round(V.dot("x.v", "y.v", dim), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

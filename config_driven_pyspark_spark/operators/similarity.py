@@ -31,22 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from config_driven_pyspark_spark.functions import vectors as V
-from config_driven_pyspark_spark.operators.dedup import _materialize, _spread
-
-
-def _dim_or_none(df: DataFrame, vec_col: str) -> int | None:
-    """First non-null vector's width, or None — one bounded ``take(1)``
-    job at plan-build time against the SMALL side of a scoring join.
-    Unlocks the unrolled whole-stage-codegen dot
-    (functions/vectors.py::dot ``dim=``, r16); a failed/empty probe just
-    keeps the interpreted HOF path, so this can never change results."""
-    try:
-        row = (
-            df.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
-        )
-        return len(row[0]) if row is not None and row[0] is not None else None
-    except Exception:
-        return None
+from config_driven_pyspark_spark.operators.dedup import (
+    _materialize,
+    _spread,
+    _vector_dim,
+)
 
 
 def _topk_by(scored: DataFrame, k: int, score_col: str) -> DataFrame:
@@ -92,16 +81,14 @@ def _rerank_exact(
         F.col(id_col).alias("query_id"),
         V.unit_normalize(F.col(vec_col)).alias("qv"),
     )
-    dim = _dim_or_none(queries, vec_col)
+    dim = _vector_dim(queries, vec_col)
     exact = (
         pool.join(truev, "neighbor_id")
         .join(F.broadcast(qv) if broadcast_queries else qv, "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            F.round(V.dot(F.col("qv"), F.col("cv"), dim), 6).alias(
-                "cosine"
-            ),
+            F.round(V.dot("qv", "cv", dim), 6).alias("cosine"),
         )
     )
     return _topk_by(exact, k, "cosine")
@@ -147,7 +134,7 @@ def brute_force_topk(
     # probe the (small) query side's vector width once: the per-pair dot
     # then runs unrolled inside whole-stage codegen (r16, guide §1.2
     # per-task work) instead of the interpreted HOF fold
-    dim = _dim_or_none(queries, vec_col)
+    dim = _vector_dim(queries, vec_col)
     if broadcast_queries:
         q = F.broadcast(q)
     scored = (
@@ -156,9 +143,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(V.dot(F.col("qv"), F.col("cv"), dim), 6).alias(
-                "cosine"
-            ),
+            F.round(V.dot("qv", "cv", dim), 6).alias("cosine"),
         )
     )
     return _topk_by(scored, k, "cosine")
@@ -195,9 +180,8 @@ def srp_lsh_topk(
             f"combinatorially), got {multiprobe}"
         )
     if dim is None:
-        row = corpus.select(vec_col).first()
         # empty corpus: any plane set works — the bucket join yields no rows
-        dim = len(row[0]) if row is not None and row[0] is not None else 1
+        dim = _vector_dim(corpus, vec_col) or 1
     from config_driven_pyspark_spark.operators.dedup import srp_planes
 
     planes = srp_planes(dim, bits, seed)
@@ -213,7 +197,7 @@ def srp_lsh_topk(
         ).select(
             out_id,
             out_vec,
-            V.hyperplane_signature(F.col(out_vec), planes).alias("bucket"),
+            V.hyperplane_signature(out_vec, planes).alias("bucket"),
         )
 
     # spread the corpus: signature + scoring work shouldn't run on the
@@ -242,9 +226,7 @@ def srp_lsh_topk(
             "query_id",
             "neighbor_id",
             # dim is known here (probed/passed above) — unrolled dot
-            F.round(V.dot(F.col("qv"), F.col("cv"), dim), 6).alias(
-                "cosine"
-            ),
+            F.round(V.dot("qv", "cv", dim), 6).alias("cosine"),
         )
     )
     return _topk_by(scored, k, "cosine")
@@ -784,9 +766,7 @@ def _score_probed_cells(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(V.dot(F.col("qv"), F.col("cv"), dim), 6).alias(
-                score_col
-            ),
+            F.round(V.dot("qv", "cv", dim), 6).alias(score_col),
         )
     )
     return _topk_by(scored, k, score_col)
@@ -1103,7 +1083,7 @@ def ncm_classify(
     and a |corpus|·|labels| map-side scoring with a per-vector
     row_number.  Nothing corpus-sized shuffles beyond the one
     aggregate."""
-    dim = _dim_or_none(df, vec_col)
+    dim = _vector_dim(df, vec_col)
     unit = _spread(df).select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
@@ -1135,7 +1115,7 @@ def ncm_classify(
         "id",
         "label",
         "pred",
-        F.round(V.dot(F.col("u"), F.col("cn"), dim), 6).alias("cosine"),
+        F.round(V.dot("u", "cn", dim), 6).alias("cosine"),
     )
     best = scored.withColumn(
         "__rn",
@@ -1308,7 +1288,7 @@ def mmr_rerank(
         raise ValueError("k must be >= 1")
     if not (0.0 <= lam <= 1.0):
         raise ValueError(f"lam must be in [0, 1], got {lam}")
-    dim = _dim_or_none(queries, vec_col)
+    dim = _vector_dim(queries, vec_col)
     cu = corpus.select(
         F.col(id_col).alias(cand_col),
         V.unit_normalize(F.col(vec_col)).alias("__cu"),
@@ -1324,9 +1304,7 @@ def mmr_rerank(
         .select(
             query_col,
             cand_col,
-            F.round(
-                V.dot(F.col("__qu"), F.col("__cu"), dim), 6
-            ).alias("__rel"),
+            F.round(V.dot("__qu", "__cu", dim), 6).alias("__rel"),
             "__cu",
         )
     )
@@ -1951,11 +1929,7 @@ def pq_topk(
             "query_id",
             "neighbor_id",
             F.round(
-                V.dot(
-                    F.col("qv"), F.col("cv"),
-                    int(cb.shape[0] * cb.shape[2]),
-                ),
-                6,
+                V.dot("qv", "cv", int(cb.shape[0] * cb.shape[2])), 6
             ).alias("approx_cosine"),
         )
     )
@@ -2033,11 +2007,7 @@ def ivfpq_topk(
             "query_id",
             "neighbor_id",
             F.round(
-                V.dot(
-                    F.col("qv"), F.col("cv"),
-                    int(cb.shape[0] * cb.shape[2]),
-                ),
-                6,
+                V.dot("qv", "cv", int(cb.shape[0] * cb.shape[2])), 6
             ).alias("approx_cosine"),
         )
     )
@@ -2255,17 +2225,9 @@ def project_embeddings(
     if out_dim < 1:
         raise ValueError(f"out_dim must be >= 1, got {out_dim}")
     if dim is None:
-        # probe the first NON-NULL vector: a leading NULL row must not
-        # silently yield wrong-length planes (ADVICE r4); the filtered
-        # probe is one bounded driver job at plan-build time — pass
-        # ``dim`` explicitly to skip it in latency-sensitive planning
-        row = df.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
-        if row is None:
-            raise ValueError(
-                f"project_embeddings: no non-null '{vec_col}' row to infer "
-                "the input dimension from — pass dim= explicitly"
-            )
-        dim = len(row[0])
+        # one bounded driver job at plan-build time — pass ``dim``
+        # explicitly to skip it in latency-sensitive planning
+        dim = _infer_dim(df, vec_col)
     from config_driven_pyspark_spark.operators.dedup import srp_planes
 
     planes = srp_planes(dim, out_dim, seed)
@@ -2273,12 +2235,7 @@ def project_embeddings(
     # per-plane dots then index a plain attribute (element_at would
     # otherwise re-evaluate a normalize EXPRESSION per component, r16)
     v = V.unit_normalize(F.col(vec_col)) if normalize else F.col(vec_col)
-    proj = F.array(
-        *[
-            V.dot(F.col("__pj_v"), F.array(*[F.lit(x) for x in p]), dim)
-            for p in planes
-        ]
-    )
+    proj = F.array(*[V.dot("__pj_v", p, dim) for p in planes])
     return (
         df.withColumn("__pj_v", v)
         .withColumn("proj", proj)
@@ -2287,15 +2244,14 @@ def project_embeddings(
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
-    """Probe the first non-null vector's length — one bounded driver job
-    at plan-build time (the project_embeddings pattern)."""
-    row = df.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
-    if row is None:
+    """:func:`_vector_dim` for operators that cannot run without a width."""
+    dim = _vector_dim(df, vec_col)
+    if dim is None:
         raise ValueError(
             f"no non-null '{vec_col}' row to infer the dimension from — "
             "pass dim= explicitly"
         )
-    return len(row[0])
+    return dim
 
 
 def _cov_parts(
@@ -2456,11 +2412,9 @@ def pca_project(
             f"model has {len(comps)} components, out_dim={out_dim}"
         )
     offs = [sum(m * c for m, c in zip(mean, comp)) for comp in comps]
-    v = F.col(vec_col)
     proj = F.array(
         *[
-            V.dot(v, F.array(*[F.lit(x) for x in comp]), len(comp))
-            - F.lit(off)
+            V.dot(vec_col, comp, len(comp)) - F.lit(off)
             for comp, off in zip(comps, offs)
         ]
     )

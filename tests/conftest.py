@@ -1,4 +1,4 @@
-"""Shared Spark session, JSON-literal fixture and plan-size helpers.
+"""Shared Spark session, JSON-literal fixture and plan-size/cost helpers.
 
 Fixture style mirrors the reference's test harness
 (``/root/reference/test/conftest.py:7-19``): a session-scoped local
@@ -10,7 +10,10 @@ goldens in FIXTURES.md §A assume.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import threading
+import types
 
 import pytest
 from pyspark.sql import DataFrame, SparkSession
@@ -47,3 +50,35 @@ def analyzed_expr_size(df: DataFrame) -> int:
     identity = getattr(predef, "$conforms")()
     exprs = df._jdf.queryExecution().analyzed().expressions()
     return sum(int(exprs.apply(i).map(identity).size()) for i in range(exprs.size()))
+
+
+@contextlib.contextmanager
+def py4j_calls():
+    """Count the py4j gateway commands the calling thread sends inside the
+    block (driver → JVM round trips, e.g. of building an expression); the
+    yielded namespace's ``n`` holds the count. No Spark job. Commands of
+    other threads, such as py4j's release of collected Java objects, are
+    not counted."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    counter = types.SimpleNamespace(n=0)
+    caller = threading.get_ident()
+    originals = {
+        cls: cls.send_command for cls in (ClientServerConnection, GatewayConnection)
+    }
+
+    def counting(send):
+        def send_command(self, *args, **kwargs):
+            counter.n += threading.get_ident() == caller
+            return send(self, *args, **kwargs)
+
+        return send_command
+
+    for cls, send in originals.items():
+        cls.send_command = counting(send)
+    try:
+        yield counter
+    finally:
+        for cls, send in originals.items():
+            cls.send_command = send

@@ -127,3 +127,43 @@ def test_merge_detail_fingerprint_mismatch_resets_floor():
     legacy = {"runs": {"a": [0.5]}, "min": {"a": 0.5}}
     merged2 = bench.merge_detail(legacy, new)
     assert merged2["min"]["a"] == 0.5
+
+
+def test_merge_detail_core_count_mismatch_resets_floors():
+    """Floors carry forward only between records taken on the same core
+    count; a record without ``cpus`` counts as a different machine."""
+    old = {"runs": {"a": [1.0]}, "min": {"a": 1.0}, "cpus": 32}
+    new = {"runs": {"a": [2.0]}, "min": {"a": 2.0}, "cpus": 8}
+    assert bench.merge_detail(old, new) is new
+    assert bench.merge_detail({**old, "cpus": None}, new) is new
+    same = bench.merge_detail({**old, "cpus": 8}, new)
+    assert same["min"]["a"] == 1.0
+    assert same["cpus"] == 8
+
+
+def test_merge_detail_engine_change_resets_floors(tmp_path):
+    """An engine edit that leaves the query functions untouched still
+    moves every fingerprint, so no floor from the old engine survives."""
+    (tmp_path / "ops.py").write_text("def f():\n    return 1\n")
+    (tmp_path / "__pycache__").mkdir()
+    (tmp_path / "__pycache__" / "ops.pyc").write_bytes(b"cache")
+    queries = {"qa": test_merge_detail_no_prior_record}
+    before = bench._query_fingerprints(
+        queries, ["qa"], bench._engine_hash(str(tmp_path))
+    )
+    (tmp_path / "__pycache__" / "ops.pyc").write_bytes(b"other cache")
+    assert bench._query_fingerprints(
+        queries, ["qa"], bench._engine_hash(str(tmp_path))
+    ) == before
+    (tmp_path / "ops.py").write_text("def f():\n    return 2\n")
+    after = bench._query_fingerprints(
+        queries, ["qa"], bench._engine_hash(str(tmp_path))
+    )
+    assert after["qa"] != before["qa"]
+    old = {"runs": {"qa": [1.0]}, "min": {"qa": 1.0}, "fingerprint": before}
+    new = {"runs": {"qa": [3.0]}, "min": {"qa": 3.0}, "fingerprint": after}
+    merged = bench.merge_detail(old, new)
+    assert merged["min"]["qa"] == 3.0
+    assert merged["runs"]["qa"] == [3.0]
+    # the real package hashes without error and is stable across calls
+    assert bench._engine_hash() == bench._engine_hash()

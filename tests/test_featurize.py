@@ -112,7 +112,7 @@ def test_unrolled_dot_bit_identical_to_hof(spark):
     out = df.select(
         "id",
         V.dot(F.col("a"), F.col("b")).alias("hof"),
-        V.dot(F.col("a"), F.col("b"), 3).alias("unrolled"),
+        V.dot("a", "b", 3).alias("unrolled"),
         V.dot(F.col("a"), F.col("b"), 10_000).alias("overcap"),
     ).collect()
     for r in out:
@@ -128,9 +128,34 @@ def test_unrolled_dot_bit_identical_to_hof(spark):
         "id long, a array<float>, b array<float>",
     ).select(
         V.dot(F.col("a"), F.col("b")).alias("hof"),
-        V.dot(F.col("a"), F.col("b"), 3).alias("unrolled"),
+        V.dot("a", "b", 3).alias("unrolled"),
     ).collect()[0]
     assert f32["hof"] == f32["unrolled"]
+    # literal vectors: each double must survive the SQL text round trip
+    # (shortest-repr literals), through the unrolled and the HOF path
+    lit = [1 / 3, -0.0, 5e-324]
+    odd = [1e300, -2.5e-7, 1 / 3, -0.0]
+    got = df.select(
+        "id",
+        V.dot(F.col("a"), F.array(*[F.lit(x) for x in lit])).alias("hof"),
+        V.dot("a", lit, 3).alias("unrolled"),
+        V.dot("a", odd, 3).alias("mislen"),
+        V.dot("a", lit).alias("sql_hof"),
+    ).collect()
+    for r in got:
+        a = dict((x[0], x[1]) for x in rows)[r["id"]]
+        want = None
+        if a is not None and None not in a and len(a) == 3:
+            want = 0.0
+            for x, y in zip(a, lit):
+                want += x * y
+        assert r["hof"] == r["unrolled"] == r["sql_hof"] or (
+            r["hof"] is None and r["unrolled"] is None and r["sql_hof"] is None
+        ), r
+        assert r["unrolled"] == want or (want is None and r["unrolled"] is None), r
+        assert r["mislen"] is None, r  # width 4 literal never matches
+    with pytest.raises(TypeError, match="column names"):
+        V.dot(F.col("a"), F.col("b"), 3)
 
 
 def test_unrolled_signature_bit_identical_to_hof(spark):
@@ -140,16 +165,21 @@ def test_unrolled_signature_bit_identical_to_hof(spark):
 
     planes = [[1.0, -0.5, 0.25], [-2.0, 0.0, 1.0], [0.5, 0.5, 0.5]]
     bad_planes = planes + [[1.0, 2.0]]  # ragged → HOF path only
+    # literal round trip: values whose decimal text is long or extreme
+    odd_planes = [[1 / 3, -0.0, 5e-324], [1e300, -2.5e-7, 1 / 3],
+                  [-0.0, 5e-324, -2.5e-7], [math.inf, 1.0, -1.0]]
     rows = [
         (1, [0.3, -0.2, 0.9]),
         (2, [0.3, -0.2]),      # width mismatch → guard falls back
         (3, None),             # NULL vector → all bits 0, sig 0
+        (4, [-1e-300, 3.0, 1e-8]),
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
     out = df.select(
         "id",
-        V.hyperplane_signature(F.col("v"), planes).alias("sig"),
-        V.hyperplane_signature(F.col("v"), bad_planes).alias("rag"),
+        V.hyperplane_signature("v", planes).alias("sig"),
+        V.hyperplane_signature("v", bad_planes).alias("rag"),
+        V.hyperplane_signature("v", odd_planes).alias("odd"),
     ).collect()
     by_id = {r["id"]: r for r in out}
 
@@ -169,3 +199,29 @@ def test_unrolled_signature_bit_identical_to_hof(spark):
     for rid, vec in [(1, rows[0][1]), (2, rows[1][1]), (3, None)]:
         assert by_id[rid]["sig"] == py_sig(vec, planes), rid
         assert by_id[rid]["rag"] == py_sig(vec, bad_planes), rid
+    for rid, vec in [(r[0], r[1]) for r in rows]:
+        assert by_id[rid]["odd"] == py_sig(vec, odd_planes), rid
+
+
+def test_unrolled_build_cost_constant_in_width(spark):
+    """The unrolled dot and signature are built as one SQL expression:
+    the py4j round trips to build them do not grow with the vector width
+    (the per-component Column build cost 18k calls for a 256-wide dot).
+    No Spark job."""
+    from config_driven_pyspark_spark.functions import vectors as V
+    from config_driven_pyspark_spark.operators.dedup import srp_planes
+
+    from tests.conftest import py4j_calls
+
+    def calls(dim):
+        with py4j_calls() as dot:
+            V.dot("a", "b", dim)
+        with py4j_calls() as sig:
+            V.hyperplane_signature("v", srp_planes(dim, 8, 7))
+        return dot.n, sig.n
+
+    V.dot("a", "b", 4)  # first parse pays one-time JVM class loading
+    (dot8, sig8), (dot256, sig256) = calls(8), calls(256)
+    assert abs(dot256 - dot8) <= 5, (dot8, dot256)
+    assert abs(sig256 - sig8) <= 5, (sig8, sig256)
+    assert max(dot8, sig8) <= 20, (dot8, sig8)

@@ -366,6 +366,36 @@ def test_embedding_pairs_empty_input(spark, embeddings):
     assert D.embedding_pairs(empty, "vec_id", "embedding").count() == 0
 
 
+def test_leading_null_vector_does_not_set_the_width(spark):
+    """The width probe skips NULL vectors: a leading NULL row used to draw
+    width-1 planes, put every vector in bucket 0 and silently score all
+    pairs."""
+    import random
+
+    rng = random.Random(3)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(1, 200)]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema).coalesce(1)
+    nulled = spark.createDataFrame([(0, None)] + rows, schema).coalesce(1)
+    assert nulled.first()["embedding"] is None
+
+    def pairs(df):
+        out = D.embedding_pairs(df, "vec_id", threshold=0.0, lsh_bits=4)
+        return sorted(map(tuple, out.collect()))
+
+    want = pairs(clean)
+    assert 0 < len(want) < 199 * 198 // 4
+    assert pairs(nulled) == want
+    queries = clean.filter(F.col("vec_id") <= 10)
+
+    def srp(corpus):
+        out = S.srp_lsh_topk(corpus, queries, k=5, bits=4)
+        # the NULL row has no cosine; it may only trail a short bucket
+        return sorted(map(tuple, out.filter(F.col("neighbor_id") != 0).collect()))
+
+    assert srp(nulled) == srp(clean)
+
+
 # -- similarity --------------------------------------------------------------
 
 
