@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from config_driven_pyspark_spark import NestedTransformer, Pipeline
+from config_driven_pyspark_spark import NestedTransformer, Pipeline, storage
 from config_driven_pyspark_spark.functions import text as TX
 from config_driven_pyspark_spark.operators import dedup as D
 from config_driven_pyspark_spark.operators import similarity as SIM
@@ -1775,7 +1775,7 @@ def q_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest = SIM.read_index_manifest(spark, path) or {}
         if int(manifest.get("deletes_applied") or 0) != n_tomb:
             raise AssertionError("manifest does not record the deletes")
-        if SIM._fs_exists(spark, f"{path}/tombstones"):
+        if storage.exists(spark, f"{path}/tombstones"):
             raise AssertionError("tombstones not cleared by compaction")
     return SIM.ivf_query_index(spark, path, queries, k=5, nprobe=3)
 

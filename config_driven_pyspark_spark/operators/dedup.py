@@ -39,6 +39,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from config_driven_pyspark_spark import storage
 from config_driven_pyspark_spark.functions import text as TX
 from config_driven_pyspark_spark.functions import vectors as V
 
@@ -403,9 +404,7 @@ def exact_dedup_incremental(
     batch_fresh = keyed.join(
         firsts, on=[id_col, "__fp"], how="left_semi"
     )
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
-    if _fs_exists(spark, store_path):
+    if storage.exists(spark, store_path):
         seen = spark.read.parquet(store_path).select(
             F.col("fingerprint").alias("__fp")
         )
@@ -1033,8 +1032,6 @@ def minhash_incremental(
         )
     rows = num_hashes // bands
     spark = df.sparkSession
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
     ex_new, sigs_new = _minhash_sign(df, id_col, text_col, k, num_hashes, unit)
     sigs_new = _materialize(sigs_new)
 
@@ -1060,7 +1057,7 @@ def minhash_incremental(
     all_b = banded(sigs_new, True)
     ex_all = ex_new.select("id", "h")
     sizes = sigs_new.select("id", "n_sh")
-    if _fs_exists(spark, sig_store):
+    if storage.exists(spark, sig_store):
         sigs_old = spark.read.parquet(sig_store)
         all_b = banded(sigs_old, False).unionByName(all_b)
         ex_all = spark.read.parquet(sh_store).unionByName(ex_all)

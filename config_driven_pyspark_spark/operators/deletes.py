@@ -67,6 +67,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from config_driven_pyspark_spark import storage
+
 _DV_DIRNAME = "_deletes"
 _DV_RE = re.compile(r"^dv_v(\d+)_s(\d+)(?:_m(\d+))?_([0-9a-f]{8})$")
 _DV_SCHEMA = "rel_path string, row_index bigint"
@@ -86,35 +88,10 @@ def _list_dv(spark: SparkSession, root: str) -> list[dict]:
     """Parsed deletion-vector entries under ``root`` (a ``_deletes`` or
     archive dir): ``{name, version, nseg, mat}``. Unparseable names are
     ignored (never silently applied)."""
-    from config_driven_pyspark_spark.operators.table import (
-        _fs,
-        _local_path,
-    )
-
-    jvm, fs = _fs(spark, root)
-    lp = _local_path(fs, root)
-    if lp is not None:  # local fast path (r16): one scandir, no py4j
-        import os as _os
-
-        try:
-            with _os.scandir(lp) as it:
-                names = [e.name for e in it if e.is_dir()]
-        except (FileNotFoundError, NotADirectoryError):
-            return []
-    else:
-        Path = jvm.org.apache.hadoop.fs.Path
-        p = Path(root)
-        if not fs.exists(p):
-            return []
-        names = [
-            st.getPath().getName()
-            for st in fs.listStatus(p)
-            if st.isDirectory()
-        ]
     out = []
-    for name in names:
+    for name, is_dir in storage.list_dir(spark, root):
         m = _DV_RE.match(name)
-        if not m:
+        if not (is_dir and m):
             continue
         out.append({
             "name": name,
@@ -155,36 +132,29 @@ def _data_fingerprint(
     changes at least one name. Returns None above ``cap`` files (too
     big to fingerprint cheaply; the caller falls back to re-staging
     under the lock)."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
     if cap is None:
         cap = _DV_FILE_CAP  # read at call time so tests can lower it
-    jvm, fs = _fs(spark, base)
-    Path = jvm.org.apache.hadoop.fs.Path
+
+    def ls(rel: str, want_dirs: bool) -> list[str]:
+        return [
+            name for name, is_dir in storage.list_dir(
+                spark, base if not rel else f"{base}/{rel}"
+            )
+            if is_dir == want_dirs and name[:1] not in ("_", ".")
+        ]
+
     dirs = [""]
     for _ in range(nseg - 1):
-        nxt = []
-        for rel in dirs:
-            p = Path(base if not rel else f"{base}/{rel}")
-            if not fs.exists(p):
-                continue
-            for st in fs.listStatus(p):
-                name = st.getPath().getName()
-                if st.isDirectory() and name[:1] not in ("_", "."):
-                    nxt.append(name if not rel else f"{rel}/{name}")
-        dirs = nxt
+        dirs = [
+            name if not rel else f"{rel}/{name}"
+            for rel in dirs for name in ls(rel, True)
+        ]
     out: dict[str, frozenset] = {}
     total = 0
     for rel in dirs:
-        p = Path(base if not rel else f"{base}/{rel}")
-        if not fs.exists(p):
+        if not storage.exists(spark, base if not rel else f"{base}/{rel}"):
             continue
-        names = {
-            st.getPath().getName()
-            for st in fs.listStatus(p)
-            if not st.isDirectory()
-            and st.getPath().getName()[:1] not in ("_", ".")
-        }
+        names = set(ls(rel, False))
         total += len(names)
         if total > cap:
             return None
@@ -198,10 +168,8 @@ def _gc_dv_staging(spark: SparkSession, base: str) -> None:
     younger than the lock lease, so age-gate like lock GC)."""
     import time as _time
 
-    from config_driven_pyspark_spark.operators.table import _fs
-
     root = _dv_root(base)
-    jvm, fs = _fs(spark, root)
+    jvm, fs = storage.fs(spark, root)
     Path = jvm.org.apache.hadoop.fs.Path
     p = Path(root)
     if not fs.exists(p):
@@ -431,13 +399,12 @@ def _dv_delete_core(
         _MAX_SCOPED_PARTITIONS,
         _LockConflict,
         _WriterLock,
-        _fs,
         _layout_matches,
         _recover_crashed_swap,
     )
 
     base = target_path.rstrip("/")
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     if not fs.exists(Path(base)):
         raise ValueError(f"no snapshot at {target_path!r}")
@@ -706,12 +673,11 @@ def coalesce_deletes(
     from config_driven_pyspark_spark.operators import history as _hist
     from config_driven_pyspark_spark.operators.table import (
         _WriterLock,
-        _fs,
         _recover_crashed_swap,
     )
 
     base = target_path.rstrip("/")
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     if not fs.exists(Path(base)):
         raise ValueError(f"no snapshot at {target_path!r}")
@@ -813,9 +779,8 @@ def _archive_absorbed(
     version dir, so the vectors to archive now live there; a scoped
     swap left them in the live ``_deletes`` dir."""
     from config_driven_pyspark_spark.operators import history as _hist
-    from config_driven_pyspark_spark.operators.table import _fs
 
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     if _hist.history_enabled(spark, base):
         from config_driven_pyspark_spark.operators.history import _hist_root
@@ -864,7 +829,6 @@ def materialize_deletes(
     from config_driven_pyspark_spark.operators import history as _hist
     from config_driven_pyspark_spark.operators.table import (
         _MAX_SCOPED_PARTITIONS,
-        _fs,
         _layout_matches,
         _read_batch_marker,
         _recover_crashed_swap,
@@ -878,8 +842,6 @@ def materialize_deletes(
                 "rewrite": "none"}
     _recover_crashed_swap(spark, base)
     _gc_dv_staging(spark, base)
-    jvm, fs = _fs(spark, base)
-    Path = jvm.org.apache.hadoop.fs.Path
     dv, nseg = _dv_frame(
         spark, [(_dv_root(base), e) for e in entries]
     )

@@ -65,6 +65,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from config_driven_pyspark_spark import storage
+
 _ENABLED_FILE = "_enabled"
 _MANIFEST_FILE = "_manifest.json"
 # per-row expansion bound for the keyless CDF multiset diff (ADVICE
@@ -78,102 +80,17 @@ def _hist_root(base: str) -> str:
     return f"{base.rstrip('/')}__history"
 
 
-def _read_small(jvm, fs, path_str: str) -> bytes | None:
-    from config_driven_pyspark_spark.operators.table import _local_path
-
-    lp = _local_path(fs, path_str)
-    if lp is not None:  # local fast path (r16): 1 syscall vs 4 py4j RPCs
-        try:
-            with open(lp, "rb") as fh:
-                return fh.read()
-        except (FileNotFoundError, IsADirectoryError, NotADirectoryError):
-            return None
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        try:
-            return bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        except Exception:
-            out = []
-            b = stream.read()
-            while b != -1:
-                out.append(b)
-                b = stream.read()
-            return bytes(out)
-    finally:
-        stream.close()
-
-
-def _write_small(jvm, fs, path_str: str, data: bytes) -> None:
-    """tmp-write + atomic replace: readers see the old file or the new
-    one, never a torn write. Local fast path mirrors
-    ``table._small_write`` (os.replace + stale-``.crc`` hygiene)."""
-    import os as _os
-
-    from config_driven_pyspark_spark.operators.table import _local_path
-
-    lp = _local_path(fs, path_str)
-    if lp is not None:
-        d, name = _os.path.split(lp)
-        _os.makedirs(d or "/", exist_ok=True)
-        tmp = f"{lp}.tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        for side in (f"{d}/.{name}.crc", f"{d}/.{name}.tmp.crc"):
-            try:
-                _os.remove(side)
-            except OSError:
-                pass
-        _os.replace(tmp, lp)
-        return
-    Path = jvm.org.apache.hadoop.fs.Path
-    final = Path(path_str)
-    tmp = Path(path_str + ".tmp")
-    fs.mkdirs(final.getParent())
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-    fs.delete(final, False)
-    fs.rename(tmp, final)
-
-
-def _scan_entries(jvm, fs, hist: str) -> tuple[dict[int, dict], set[int]]:
+def _scan_entries(
+    spark: SparkSession, hist: str
+) -> tuple[dict[int, dict], set[int]]:
     """One listing of ``__history``: ``{version: manifest}`` for
     complete entries + the set of INCOMPLETE version numbers (a
     ``.pending`` marker or a version dir without a manifest — crash
     debris whose pre-state may be partial or lost)."""
-    from config_driven_pyspark_spark.operators.table import _local_path
-
     complete: dict[int, dict] = {}
     dirs: set[int] = set()
     pending: set[int] = set()
-    lp = _local_path(fs, hist)
-    if lp is not None:
-        # local fast path (r16): one scandir replaces listStatus plus
-        # 2-3 py4j attribute RPCs per entry
-        import os as _os
-
-        try:
-            with _os.scandir(lp) as it:
-                entries = [(e.name, e.is_dir()) for e in it]
-        except (FileNotFoundError, NotADirectoryError):
-            return complete, set()
-    else:
-        Path = jvm.org.apache.hadoop.fs.Path
-        hist_p = Path(hist)
-        if not fs.exists(hist_p):
-            return complete, set()
-        entries = [
-            (st.getPath().getName(), st.isDirectory())
-            for st in fs.listStatus(hist_p)
-        ]
-    for name, is_dir in entries:
+    for name, is_dir in storage.list_dir(spark, hist):
         m = _V_RE.match(name)
         if not m:
             continue
@@ -183,13 +100,7 @@ def _scan_entries(jvm, fs, hist: str) -> tuple[dict[int, dict], set[int]]:
         elif is_dir:
             dirs.add(n)
     for n in dirs:
-        raw = _read_small(jvm, fs, f"{hist}/v{n}/{_MANIFEST_FILE}")
-        doc = None
-        if raw is not None:
-            try:
-                doc = json.loads(raw.decode())
-            except ValueError:
-                doc = None
+        doc = storage.read_json(spark, f"{hist}/v{n}/{_MANIFEST_FILE}")
         if doc is not None and n not in pending:
             complete[n] = doc
         else:
@@ -198,13 +109,8 @@ def _scan_entries(jvm, fs, hist: str) -> tuple[dict[int, dict], set[int]]:
 
 
 def history_enabled(spark: SparkSession, target_path: str) -> bool:
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, target_path)
-    return fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{_hist_root(target_path)}/{_ENABLED_FILE}"
-        )
+    return storage.exists(
+        spark, f"{_hist_root(target_path)}/{_ENABLED_FILE}"
     )
 
 
@@ -220,19 +126,16 @@ def enable_table_history(
     the on-disk layout; history additionally needs it to interpret
     entry directories). Idempotent; re-enabling after
     ``disable_table_history`` starts a fresh v0."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
     import time as _time
 
-    jvm, fs = _fs(spark, target_path)
     # enabled_ts anchors TIMESTAMP AS OF: version 0's commit time is
     # the moment history started (timestamps before it cannot resolve)
     doc = {
         "partition_by": list(partition_by or []),
         "enabled_ts": _time.time(),
     }
-    _write_small(
-        jvm, fs,
+    storage.write_bytes(
+        spark,
         f"{_hist_root(target_path)}/{_ENABLED_FILE}",
         json.dumps(doc).encode(),
     )
@@ -241,22 +144,14 @@ def enable_table_history(
 def disable_table_history(spark: SparkSession, target_path: str) -> None:
     """Drop retention AND every retained version (whole-directory
     delete). Mutating ops go back to deleting their backups."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, target_path)
+    jvm, fs = storage.fs(spark, target_path)
     fs.delete(
         jvm.org.apache.hadoop.fs.Path(_hist_root(target_path)), True
     )
 
 
-def _enabled_doc(jvm, fs, base: str) -> dict | None:
-    raw = _read_small(jvm, fs, f"{_hist_root(base)}/{_ENABLED_FILE}")
-    if raw is None:
-        return None
-    try:
-        return json.loads(raw.decode())
-    except ValueError:
-        return None
+def _enabled_doc(spark: SparkSession, base: str) -> dict | None:
+    return storage.read_json(spark, f"{_hist_root(base)}/{_ENABLED_FILE}")
 
 
 def begin_retention(
@@ -268,10 +163,8 @@ def begin_retention(
     number this swap will create (``.pending`` marker dropped so a
     crash leaves a trace and never a silently-wrong history), or None
     when history is not enabled for this table."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, base)
-    doc = _enabled_doc(jvm, fs, base)
+    jvm, fs = storage.fs(spark, base)
+    doc = _enabled_doc(spark, base)
     if doc is None:
         return None
     pinned = doc.get("partition_by", [])
@@ -283,7 +176,7 @@ def begin_retention(
             "re-enable history to change the layout"
         )
     hist = _hist_root(base)
-    complete, incomplete = _scan_entries(jvm, fs, hist)
+    complete, incomplete = _scan_entries(spark, hist)
     # allocate above the persisted high-water mark, not just the
     # surviving entries: vacuum may have dropped every entry (idle
     # table + age bound, or keep_last=0) and REUSING a version number
@@ -316,9 +209,7 @@ def begin_retention(
 def abort_retention(spark: SparkSession, base: str, version: int) -> None:
     """In-process failure after ``begin_retention``: the swap rolled
     every rename back, so the pending marker is removable — no gap."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     fs.delete(
         jvm.org.apache.hadoop.fs.Path(
             f"{_hist_root(base)}/v{version}.pending"
@@ -398,9 +289,7 @@ def commit_retention(
     insert scoped swap — makes an empty entry), write the manifest,
     clear the pending marker. Rename-only: retention never copies
     data."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     hist = _hist_root(base)
     vdir = Path(f"{hist}/v{version}")
@@ -445,8 +334,8 @@ def commit_retention(
         # read_table_version / table_changes read historical roots with
         # it instead of paying a parquet schema-inference pass per root
         manifest["schema"] = schema_json
-    _write_small(
-        jvm, fs, f"{hist}/v{version}/{_MANIFEST_FILE}",
+    storage.write_bytes(
+        spark, f"{hist}/v{version}/{_MANIFEST_FILE}",
         json.dumps(manifest).encode(),
     )
     fs.delete(Path(f"{hist}/v{version}.pending"), False)
@@ -456,11 +345,11 @@ def commit_retention(
     # lost update only leaves high_water below a committed version,
     # which is harmless — allocation also takes max over the surviving
     # entries, and vacuum re-bumps from everything it observes.
-    doc = _enabled_doc(jvm, fs, base) or {}
+    doc = _enabled_doc(spark, base) or {}
     if version > int(doc.get("high_water", 0)):
         doc["high_water"] = version
-        _write_small(
-            jvm, fs, f"{hist}/{_ENABLED_FILE}",
+        storage.write_bytes(
+            spark, f"{hist}/{_ENABLED_FILE}",
             json.dumps(doc).encode(),
         )
 
@@ -471,17 +360,14 @@ def _versions(
     """(complete entries, current version, readable floor,
     partition_by). Floor = the newest incomplete-or-missing version —
     reconstruction below it would need an entry that is gone."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, base)
-    doc = _enabled_doc(jvm, fs, base)
+    doc = _enabled_doc(spark, base)
     if doc is None:
         raise ValueError(
             f"table history is not enabled for {base!r} — call "
             "enable_table_history first (and note versions only exist "
             "for swaps that ran after enabling)"
         )
-    complete, incomplete = _scan_entries(jvm, fs, _hist_root(base))
+    complete, incomplete = _scan_entries(spark, _hist_root(base))
     # the persisted high-water keeps `current` (and the floor) honest
     # after a vacuum dropped every entry: the table is still at version
     # N, reading N is a live read, N-1 and below stay refused
@@ -506,17 +392,14 @@ def commit_timestamps(
     plus version 0 mapped to the enable_table_history moment. Entries
     written before timestamp support are absent (their manifests carry
     no ``ts``)."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
     base = target_path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    doc = _enabled_doc(jvm, fs, base)
+    doc = _enabled_doc(spark, base)
     if doc is None:
         raise ValueError(
             f"table history is not enabled for {base!r} — call "
             "enable_table_history first"
         )
-    complete, _incomplete = _scan_entries(jvm, fs, _hist_root(base))
+    complete, _incomplete = _scan_entries(spark, _hist_root(base))
     out: dict[int, float] = {}
     if doc.get("enabled_ts") is not None:
         out[0] = float(doc["enabled_ts"])
@@ -624,10 +507,7 @@ def read_table_version(
             f"v{floor} was vacuumed, lost to a crashed swap, or a "
             "concurrent swap is in flight — retry if writers are live)"
         )
-    from config_driven_pyspark_spark.operators.table import (
-        _fs,
-        _list_partition_dirs,
-    )
+    from config_driven_pyspark_spark.operators.table import _list_partition_dirs
 
     hist = _hist_root(base)
     resolved: dict[str, tuple[str, list[str]] | None] = {}
@@ -1039,17 +919,8 @@ def read_changes_cursor(
 ) -> int | None:
     """Last PROCESSED version recorded at ``checkpoint`` (None before
     the first successful batch)."""
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, checkpoint)
-    raw = _read_small(
-        jvm, fs, f"{checkpoint.rstrip('/')}/cursor.json"
-    )
-    if raw is None:
-        return None
-    try:
-        doc = json.loads(raw.decode())
-    except ValueError:
+    doc = storage.read_json(spark, f"{checkpoint.rstrip('/')}/cursor.json")
+    if doc is None:
         return None
     v = doc.get("version")
     return int(v) if v is not None else None
@@ -1058,11 +929,8 @@ def read_changes_cursor(
 def _write_changes_cursor(
     spark: SparkSession, checkpoint: str, version: int
 ) -> None:
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, checkpoint)
-    _write_small(
-        jvm, fs, f"{checkpoint.rstrip('/')}/cursor.json",
+    storage.write_bytes(
+        spark, f"{checkpoint.rstrip('/')}/cursor.json",
         json.dumps({"version": int(version)}).encode(),
     )
 
@@ -1169,7 +1037,6 @@ def _exactly_once_append(
 
     Returns False when the batch was already committed (skipped)."""
     from config_driven_pyspark_spark.operators.table import (
-        _fs,
         _read_batch_marker,
         _write_batch_marker,
     )
@@ -1178,25 +1045,23 @@ def _exactly_once_append(
     marker = _read_batch_marker(spark, base)
     if marker is not None and to_v <= marker:
         return False
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     prefix = f"batch-v{to_v:09d}-"
-    if fs.exists(Path(base)):
-        for st in fs.listStatus(Path(base)):
-            if st.getPath().getName().startswith(prefix):
-                fs.delete(st.getPath(), True)
+    for name, _is_dir in storage.list_dir(spark, base):
+        if name.startswith(prefix):
+            fs.delete(Path(f"{base}/{name}"), True)
     # hidden inflight dir (dot prefix = invisible to parquet readers of
     # the sink); the rename below publishes whole files atomically
     tmp = f"{base}/.inflight-v{to_v}"
     batch.write.mode("overwrite").parquet(tmp)
     i = 0
-    for st in fs.listStatus(Path(tmp)):
-        name = st.getPath().getName()
-        if st.isDirectory() or name.startswith(("_", ".")):
+    for name, is_dir in storage.list_dir(spark, tmp):
+        if is_dir or name.startswith(("_", ".")):
             continue
         ext = name.split(".", 1)[1] if "." in name else "parquet"
         if not fs.rename(
-            st.getPath(), Path(f"{base}/{prefix}{i:05d}.{ext}")
+            Path(f"{tmp}/{name}"), Path(f"{base}/{prefix}{i:05d}.{ext}")
         ):
             raise IOError(
                 f"could not publish CDF batch file {name!r} into "
@@ -1397,13 +1262,11 @@ def vacuum_table_history(
         raise ValueError("older_than_seconds must be >= 0")
     import time as _time
 
-    from config_driven_pyspark_spark.operators.table import _fs
-
     base = target_path.rstrip("/")
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     hist = _hist_root(base)
-    complete, incomplete = _scan_entries(jvm, fs, hist)
+    complete, incomplete = _scan_entries(spark, hist)
     keep = set(complete)
     if keep_last is not None:
         keep &= set(sorted(complete)[-keep_last:]) if keep_last else set()
@@ -1427,13 +1290,13 @@ def vacuum_table_history(
     # bump the persisted high-water to everything ever observed (incl.
     # crash-debris numbers) BEFORE deleting, so the version counter can
     # never move backwards no matter what this vacuum drops
-    doc = _enabled_doc(jvm, fs, base) or {}
+    doc = _enabled_doc(spark, base) or {}
     observed = max(0, int(doc.get("high_water", 0)),
                    *complete, *incomplete)
     if observed > int(doc.get("high_water", 0)):
         doc["high_water"] = observed
-        _write_small(
-            jvm, fs, f"{hist}/{_ENABLED_FILE}",
+        storage.write_bytes(
+            spark, f"{hist}/{_ENABLED_FILE}",
             json.dumps(doc).encode(),
         )
     cutoff = min(keep) if keep else max({0, *complete, *incomplete}) + 1

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from config_driven_pyspark_spark import storage
 from config_driven_pyspark_spark.functions import vectors as V
 from config_driven_pyspark_spark.operators.dedup import (
     _materialize,
@@ -484,11 +485,9 @@ _META_CACHE: dict = {}
 def _dir_stamp(spark: SparkSession, path: str) -> int:
     import zlib
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm, fs = storage.fs(spark, path)
     stamp = 1
-    for st in fs.listStatus(hpath):
+    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
         # the file NAME goes into the stamp (ADVICE r6): mtime+size alone
         # collide when a rebuild writes same-size files within the FS's
         # mtime granularity (e.g. same n_centroids, different seed) —
@@ -509,23 +508,6 @@ def _cached_meta(spark: SparkSession, path: str, loader):
     value = loader()
     _META_CACHE[path] = (stamp, value)
     return value
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` exists — any Spark-readable scheme (local,
-    HDFS, s3a...); local paths short-circuit to one os.stat (r16)."""
-    import os as _os
-
-    from config_driven_pyspark_spark.operators.table import (
-        _fs,
-        _local_path,
-    )
-
-    jvm, fs = _fs(spark, path)
-    lp = _local_path(fs, path)
-    if lp is not None:
-        return _os.path.exists(lp)
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def _corpus_fingerprint(corpus: DataFrame) -> Optional[str]:
@@ -574,7 +556,7 @@ def read_index_manifest(spark: SparkSession, path: str) -> Optional[dict]:
     query path otherwise each pay a small Spark job per query batch."""
     import json
 
-    if not _fs_exists(spark, f"{path}/manifest"):
+    if not storage.exists(spark, f"{path}/manifest"):
         return None
 
     def load():
@@ -694,7 +676,7 @@ def ivf_topk(
     """
     spark = corpus.sparkSession
     trained = None
-    if centroids_path is not None and _fs_exists(spark, centroids_path):
+    if centroids_path is not None and storage.exists(spark, centroids_path):
         # explicit existence probe (not a broad except AnalysisException):
         # a real read error on a present-but-corrupt codebook must surface,
         # not silently trigger an expensive retrain (ADVICE r5)
@@ -982,7 +964,7 @@ def ivf_append_index(
     spark = corpus_new.sparkSession
     missing = [
         part for part in ("centroids", "postings")
-        if not _fs_exists(spark, f"{path}/{part}")
+        if not storage.exists(spark, f"{path}/{part}")
     ]
     if missing:
         raise ValueError(
@@ -1445,7 +1427,7 @@ def ivf_delete_index(
     same as build/append/compact."""
     missing = [
         part for part in ("centroids", "postings")
-        if not _fs_exists(spark, f"{path}/{part}")
+        if not storage.exists(spark, f"{path}/{part}")
     ]
     if missing:
         raise ValueError(
@@ -1472,7 +1454,7 @@ def _apply_tombstones(
     """Anti-join ``<path>/tombstones`` (if any) against a postings scan.
     Broadcast by size: the tombstone table is ids-only and tiny next to
     the postings, so the join never disturbs partition pruning."""
-    if not _fs_exists(spark, f"{path}/tombstones"):
+    if not storage.exists(spark, f"{path}/tombstones"):
         return postings
     tomb = spark.read.parquet(f"{path}/tombstones")
     return postings.join(F.broadcast(tomb), "neighbor_id", "left_anti")
@@ -1499,7 +1481,7 @@ def ivf_compact_index(spark: SparkSession, path: str) -> None:
     writer that owns the index, like build/append."""
     missing = [
         part for part in ("centroids", "postings")
-        if not _fs_exists(spark, f"{path}/{part}")
+        if not storage.exists(spark, f"{path}/{part}")
     ]
     if missing:
         raise ValueError(
@@ -1514,10 +1496,7 @@ def ivf_compact_index(spark: SparkSession, path: str) -> None:
         )
     tmp = f"{path}/postings_compacting"
     old = f"{path}/postings_precompact"
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    jvm, fs = storage.fs(spark, path)
     for stale in (tmp, old):  # debris from a crashed earlier compaction
         fs.delete(jvm.org.apache.hadoop.fs.Path(stale), True)
     postings = spark.read.parquet(f"{path}/postings")
@@ -1525,7 +1504,7 @@ def ivf_compact_index(spark: SparkSession, path: str) -> None:
     # tombstoned rows actually present FIRST (ids deleted twice or never
     # present must not shift the verification target), rewrite without
     # them, clear the table after the swap
-    has_tombs = _fs_exists(spark, f"{path}/tombstones")
+    has_tombs = storage.exists(spark, f"{path}/tombstones")
     n_dead = 0
     if has_tombs:
         tomb = spark.read.parquet(f"{path}/tombstones")
@@ -1620,7 +1599,7 @@ def ivf_query_index(
     # masquerade as "index absent" (ADVICE r5)
     missing = [
         part for part in ("centroids", "postings")
-        if not _fs_exists(spark, f"{path}/{part}")
+        if not storage.exists(spark, f"{path}/{part}")
     ]
     if missing:
         raise ValueError(
@@ -1702,7 +1681,7 @@ def ivf_query_index(
     if manifest.get("pq_m"):
         import numpy as np
 
-        if not _fs_exists(spark, f"{path}/pq_codebooks"):
+        if not storage.exists(spark, f"{path}/pq_codebooks"):
             raise ValueError(
                 f"no IVF index at {path!r}: missing pq_codebooks — "
                 "build one with ivf_build_index first"
@@ -2547,7 +2526,7 @@ def stage_similarity(df: DataFrame, spec: dict, ctx=None) -> DataFrame:
                 ),
                 "quantization": spec.get("quantization"),
             }
-            if not _fs_exists(spark, f"{index_path}/postings"):
+            if not storage.exists(spark, f"{index_path}/postings"):
                 ivf_build_index(
                     df, index_path, id_col, vec_col,
                     build_params["n_centroids"], build_params["centroids"],

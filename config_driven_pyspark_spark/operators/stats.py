@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from config_driven_pyspark_spark import storage
+
 
 def analyze_table(
     spark: SparkSession,
@@ -216,14 +218,10 @@ def save_table_stats(
             "skew_x": round(m / (n / d), 3) if n and d else 0.0,
         }
     doc = {"version": 1, "n_rows": int(n), "columns": per}
-    from config_driven_pyspark_spark.operators.history import _write_small
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    jvm, fs = _fs(spark, target_path)
     import json
 
-    _write_small(
-        jvm, fs,
+    storage.write_bytes(
+        spark,
         f"{target_path.rstrip('/')}/{_PLANNER_STATS_FILE}",
         json.dumps(doc).encode(),
     )
@@ -231,26 +229,13 @@ def save_table_stats(
 
 
 def load_table_stats(spark: SparkSession, target_path: str) -> dict | None:
-    """The persisted planner stats, or None (absent/unreadable —
-    consumers fall back to un-hinted plans, zero behavior change)."""
-    from config_driven_pyspark_spark.operators.history import _read_small
-    from config_driven_pyspark_spark.operators.table import _fs
-
-    import json
-
-    jvm, fs = _fs(spark, target_path)
-    raw = _read_small(
-        jvm, fs, f"{target_path.rstrip('/')}/{_PLANNER_STATS_FILE}"
+    """The persisted planner stats, or None (absent or not a version-1
+    stats doc — consumers fall back to un-hinted plans, zero behavior
+    change). A file that cannot be read raises."""
+    doc = storage.read_json(
+        spark, f"{target_path.rstrip('/')}/{_PLANNER_STATS_FILE}"
     )
-    if raw is None:
-        return None
-    try:
-        doc = json.loads(raw.decode())
-    except ValueError:
-        return None
-    if not (isinstance(doc, dict) and doc.get("version") == 1):
-        return None
-    return doc
+    return doc if doc is not None and doc.get("version") == 1 else None
 
 
 def plan_join_strategy(

@@ -56,6 +56,8 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from config_driven_pyspark_spark import storage
+
 # a batch touching this many partitions is effectively a full rewrite —
 # fall back rather than drive thousands of per-partition renames
 _MAX_SCOPED_PARTITIONS = 4096
@@ -70,134 +72,6 @@ _HIVE_ESCAPE_CHARS = set('"#%\'*/:=?\\{[]^\x7f')
 # target means the swap COMPLETED and the backup is pure debris.
 # Underscore prefix = invisible to the parquet reader.
 _FULL_SWAP_MARKER = "_premerge_full"
-
-
-def _fs(spark: SparkSession, path: str):
-    """(jvm, FileSystem) for ``path`` — cached per (session, scheme):
-    ``getFileSystem`` returns the same JVM object for a scheme anyway,
-    so the repeated Path-construction/lookup round trips (measured ~4 ms
-    × dozens per lifecycle op, r16) buy nothing."""
-    jvm = spark._jvm
-    # cache key: the explicit scheme, or "" for schemeless paths (those
-    # resolve against fs.defaultFS, which need not be the local fs)
-    head = path.split("/", 1)[0]
-    scheme = head[:-1] if head.endswith(":") and head[:-1].isalpha() else (
-        path.split("://", 1)[0] if "://" in path else ""
-    )
-    try:
-        cache = spark._cdp_fs_cache
-    except AttributeError:
-        cache = spark._cdp_fs_cache = {}
-    fs = cache.get(scheme)
-    if fs is None:
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        cache[scheme] = fs
-    return jvm, fs
-
-
-# fs-proxy id → (proxy ref, is-local); the ref pins the py4j object so
-# the id can never be reused while cached
-_FS_LOCAL: dict[int, tuple] = {}
-
-
-def _fs_is_local(fs) -> bool:
-    ent = _FS_LOCAL.get(id(fs))
-    if ent is None:
-        try:
-            local = str(fs.getScheme()) == "file"
-        except Exception:
-            local = False
-        _FS_LOCAL[id(fs)] = ent = (fs, local)
-    return ent[1]
-
-
-def _local_path(fs, path_str: str) -> str | None:
-    """Plain filesystem path when ``fs`` is the local filesystem and
-    ``path_str`` carries no foreign scheme — the small-metadata fast
-    path then uses Python I/O (one syscall) instead of 3-6 py4j round
-    trips per read/write/list. None keeps the Hadoop path (remote
-    schemes, exotic configs): behavior there is byte-identical."""
-    if "://" in path_str:
-        return None
-    if not _fs_is_local(fs):
-        return None
-    if path_str.startswith("file:"):
-        return path_str[5:] or "/"
-    return path_str
-
-
-def _small_read(spark: SparkSession, path_str: str) -> bytes | None:
-    """Whole small file, or None when absent/unreadable. Local fast
-    path: one Python open (the Hadoop route costs 4+ py4j round trips —
-    exists, open, read, close — measured ~9 ms each, × dozens per
-    lifecycle op, r16)."""
-    jvm, fs = _fs(spark, path_str)
-    lp = _local_path(fs, path_str)
-    if lp is not None:
-        try:
-            with open(lp, "rb") as fh:
-                return fh.read()
-        except (FileNotFoundError, IsADirectoryError, NotADirectoryError):
-            return None
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    try:
-        if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            try:
-                return bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                )
-            except Exception:
-                out = []
-                b = stream.read()
-                while b != -1:
-                    out.append(b)
-                    b = stream.read()
-                return bytes(out)
-        finally:
-            stream.close()
-    except Exception:
-        return None
-
-
-def _small_write(spark: SparkSession, path_str: str, data: bytes) -> None:
-    """tmp-write + atomic replace: readers see the old file or the new
-    one, never a torn write. Local fast path uses ``os.replace`` (a
-    genuinely atomic overwrite — the Hadoop route's delete+rename has a
-    no-file window) and drops any stale ``.crc`` sidecar a previous
-    Hadoop-side write left (the checksummed LocalFileSystem would
-    otherwise refuse the new bytes)."""
-    import os as _os
-
-    jvm, fs = _fs(spark, path_str)
-    lp = _local_path(fs, path_str)
-    if lp is not None:
-        d, name = _os.path.split(lp)
-        _os.makedirs(d or "/", exist_ok=True)
-        tmp = f"{lp}.tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        for side in (f"{d}/.{name}.crc", f"{d}/.{name}.tmp.crc"):
-            try:
-                _os.remove(side)
-            except OSError:
-                pass
-        _os.replace(tmp, lp)
-        return
-    Path = jvm.org.apache.hadoop.fs.Path
-    final = Path(path_str)
-    tmp = Path(path_str + ".tmp")
-    fs.mkdirs(final.getParent())
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-    fs.delete(final, False)
-    fs.rename(tmp, final)
 
 
 def _hive_escape(value: str) -> str:
@@ -411,58 +285,34 @@ def _layout_matches(
     layout (unpartitioned files, or different/missing partition levels)
     would leave the old copies in place next to the promoted partitions
     — fall back to a full rewrite, which re-lays the table out."""
-    jvm, fs = _fs(spark, target_path)
-    p = jvm.org.apache.hadoop.fs.Path(target_path)
+    p = target_path
     for col in partition_by:
         kids = [
-            st for st in fs.listStatus(p)
-            if st.isDirectory() and "=" in st.getPath().getName()
+            name for name, is_dir in storage.list_dir(spark, p)
+            if is_dir and "=" in name
         ]
         if not kids:
             return False
         prefix = _hive_escape(col) + "="
-        if not all(
-            st.getPath().getName().startswith(prefix) for st in kids
-        ):
+        if not all(name.startswith(prefix) for name in kids):
             return False
-        p = kids[0].getPath()
+        p = f"{p}/{kids[0]}"
     return True
 
 
 def _list_partition_dirs(spark: SparkSession, base: str, depth: int) -> list[str]:
     """Relative ``p=v[/q=w...]`` directories actually present under
     ``base``, to ``depth`` partition levels."""
-    jvm, fs = _fs(spark, base)
-    lp = _local_path(fs, base)
     rels = [""]
     for _ in range(depth):
-        nxt = []
-        for rel in rels:
-            full = base if not rel else f"{base}/{rel}"
-            if lp is not None:  # local fast path (r16): scandir
-                import os as _os
-
-                lfull = lp if not rel else f"{lp}/{rel}"
-                try:
-                    with _os.scandir(lfull) as it:
-                        kids = [
-                            (e.name, e.is_dir()) for e in it
-                        ]
-                except (FileNotFoundError, NotADirectoryError):
-                    continue
-            else:
-                Path = jvm.org.apache.hadoop.fs.Path
-                p = Path(full)
-                if not fs.exists(p):
-                    continue
-                kids = [
-                    (st.getPath().getName(), st.isDirectory())
-                    for st in fs.listStatus(p)
-                ]
-            for name, is_dir in kids:
-                if is_dir and "=" in name:
-                    nxt.append(name if not rel else f"{rel}/{name}")
-        rels = nxt
+        rels = [
+            name if not rel else f"{rel}/{name}"
+            for rel in rels
+            for name, is_dir in storage.list_dir(
+                spark, base if not rel else f"{base}/{rel}"
+            )
+            if is_dir and "=" in name
+        ]
     return rels
 
 
@@ -482,7 +332,7 @@ def _partition_files(
     percent-encodes), so Hive-escaped directories round-trip."""
     from urllib.parse import unquote, urlparse
 
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     qbase = unquote(
         urlparse(fs.makeQualified(Path(base)).toString()).path
@@ -572,19 +422,19 @@ def _ser_stat(v):
 
 
 def _read_key_stats(spark: SparkSession, base: str) -> dict | None:
-    data = _small_read(spark, f"{base.rstrip('/')}/{_KEY_STATS_FILE}")
-    if data is None:
-        return None
+    # unreadable = absent, as in :func:`_read_json_doc`
     try:
-        return json.loads(data.decode())
-    except ValueError:
+        return storage.read_json(
+            spark, f"{base.rstrip('/')}/{_KEY_STATS_FILE}"
+        )
+    except Exception:
         return None
 
 
 def _write_key_stats(spark: SparkSession, base: str, doc: dict) -> None:
-    """tmp-write + atomic replace (:func:`_small_write`): a crash
+    """tmp-write + replace (:func:`storage.write_bytes`): a crash
     mid-update leaves either the old sidecar or none — never torn."""
-    _small_write(
+    storage.write_bytes(
         spark, f"{base.rstrip('/')}/{_KEY_STATS_FILE}",
         json.dumps(doc).encode(),
     )
@@ -595,7 +445,7 @@ def _delete_key_stats(spark: SparkSession, base: str) -> None:
     partition-level stats (full rewrites, restores, alters, ops that
     don't maintain them) invalidates the file-level ones for the same
     reason."""
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     p = jvm.org.apache.hadoop.fs.Path(
         f"{base.rstrip('/')}/{_KEY_STATS_FILE}"
     ).getParent()
@@ -817,19 +667,15 @@ def _read_json_doc(spark: SparkSession, path: str) -> dict | None:
     # unreadable (torn write, checksum mismatch) = absent — every
     # consumer treats a missing doc as "read everything", the safe
     # direction
-    data = _small_read(spark, path)
-    if data is None:
-        return None
     try:
-        doc = json.loads(data.decode())
-    except ValueError:
+        return storage.read_json(spark, path)
+    except Exception:
         return None
-    return doc if isinstance(doc, dict) else None
 
 
 def _write_json_doc(spark: SparkSession, path: str, doc: dict) -> None:
     """tmp-write + atomic replace, like :func:`_write_key_stats`."""
-    _small_write(spark, path, json.dumps(doc).encode())
+    storage.write_bytes(spark, path, json.dumps(doc).encode())
 
 
 def _read_file_stats_meta(spark: SparkSession, base: str) -> dict | None:
@@ -852,14 +698,9 @@ def _read_file_stats_shards(
     root = f"{base.rstrip('/')}/{_FILE_STATS_SHARDS}"
     names: list[str]
     if dirs is None:
-        jvm, fs = _fs(spark, base)
-        p = jvm.org.apache.hadoop.fs.Path(root)
-        if not fs.exists(p):
-            return {}
         names = [
-            st.getPath().getName()
-            for st in fs.listStatus(p)
-            if st.getPath().getName().endswith(".json")
+            name for name, _is_dir in storage.list_dir(spark, root)
+            if name.endswith(".json")
         ]
     else:
         names = [f"{_shard_name(d)}.json" for d in dirs]
@@ -900,7 +741,7 @@ def _write_file_stats_shard(
     the shard drops entirely (its files read as unknown — safe)."""
     path = f"{base.rstrip('/')}/{_FILE_STATS_SHARDS}/{_shard_name(d)}.json"
     if not entries or len(entries) > _MAX_FILE_STATS_FILES:
-        jvm, fs = _fs(spark, base)
+        jvm, fs = storage.fs(spark, base)
         fs.delete(jvm.org.apache.hadoop.fs.Path(path), False)
         return
     if len(entries) > _MAX_BLOOM_FILES:
@@ -932,7 +773,7 @@ def _write_file_stats(spark: SparkSession, base: str, doc: dict) -> None:
 
 
 def _delete_file_stats(spark: SparkSession, base: str) -> None:
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     fs.delete(
         jvm.org.apache.hadoop.fs.Path(
             f"{base.rstrip('/')}/{_FILE_STATS_DIR}"
@@ -962,7 +803,7 @@ def _collect_file_key_stats(
     safe; stale-narrow stats lose rows)."""
     from urllib.parse import unquote, urlparse
 
-    jvm, fs = _fs(spark, path)
+    jvm, fs = storage.fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     qbase = unquote(
         urlparse(fs.makeQualified(Path(path)).toString()).path
@@ -1140,16 +981,10 @@ def _file_skip_paths(
     # whole-table listing when it is not (never an RPC-per-partition
     # loop over a 10⁵-dir table — the r11 finding)
     if len(dirs) <= 32:
-        jvm, fs = _fs(spark, base)
-        Path = jvm.org.apache.hadoop.fs.Path
         by_dir: dict[str, list[str]] = {}
         for d in dirs:
-            p = Path(f"{base}/{d}")
-            if not fs.exists(p):
-                continue
-            for st in fs.listStatus(p):
-                name = st.getPath().getName()
-                if st.isDirectory() or name.startswith(("_", ".")):
+            for name, is_dir in storage.list_dir(spark, f"{base}/{d}"):
+                if is_dir or name.startswith(("_", ".")):
                     continue
                 by_dir.setdefault(d, []).append(f"{d}/{name}")
     else:
@@ -1225,17 +1060,15 @@ class _SidecarMutex:
         self._stale = stale_s
         self._owner = None
 
-    def _path(self, jvm):
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self._base}__sidecar_mutex"
-        )
+    def _path(self) -> str:
+        return f"{self._base}__sidecar_mutex"
 
     def __enter__(self):
         import time as _time
         import uuid as _uuid
 
-        jvm, fs = _fs(self._spark, self._base)
-        p = self._path(jvm)
+        jvm, fs = storage.fs(self._spark, self._base)
+        p = jvm.org.apache.hadoop.fs.Path(self._path())
         self._owner = _uuid.uuid4().hex
         deadline = _time.time() + self._timeout
         while True:
@@ -1266,27 +1099,15 @@ class _SidecarMutex:
         return self
 
     def still_mine(self) -> bool:
-        jvm, fs = _fs(self._spark, self._base)
-        try:
-            stream = fs.open(self._path(jvm))
-        except Exception:
-            return False
-        try:
-            return bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            ).decode("utf-8", "replace") == self._owner
-        except Exception:
-            return False
-        finally:
-            try:
-                stream.close()
-            except Exception:
-                pass
+        raw = storage.read_bytes(self._spark, self._path())
+        return raw is not None and (
+            raw.decode("utf-8", "replace") == self._owner
+        )
 
     def __exit__(self, *exc):
-        jvm, fs = _fs(self._spark, self._base)
+        jvm, fs = storage.fs(self._spark, self._base)
         if self.still_mine():
-            fs.delete(self._path(jvm), False)
+            fs.delete(jvm.org.apache.hadoop.fs.Path(self._path()), False)
         return False
 
 
@@ -1442,34 +1263,8 @@ class _WriterLock:
     def _dir(self) -> str:
         return f"{self._base}{_LOCK_DIR_SUFFIX}"
 
-    def _entry_path(self, jvm):
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self._dir()}/{self._owner}.json"
-        )
-
-    def _read_entry(self, jvm, fs, path) -> dict | None:
-        import json
-
-        try:
-            stream = fs.open(path)
-        except Exception:
-            return None
-        try:
-            raw = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        except Exception:
-            return None
-        finally:
-            try:
-                stream.close()
-            except Exception:
-                pass
-        try:
-            doc = json.loads(raw.decode())
-        except ValueError:
-            return None
-        return doc if isinstance(doc, dict) else None
+    def _entry(self) -> str:
+        return f"{self._dir()}/{self._owner}.json"
 
     def _intersects(self, other_scope) -> bool:
         if self._scope is None or other_scope is None:
@@ -1507,7 +1302,7 @@ class _WriterLock:
         import time as _time
         import uuid as _uuid
 
-        jvm, fs = _fs(self._spark, self._base)
+        jvm, fs = storage.fs(self._spark, self._base)
         Path = jvm.org.apache.hadoop.fs.Path
         self._owner = _uuid.uuid4().hex
         # a legacy pre-r13 single-file lock: live blocks, stale clears
@@ -1535,7 +1330,7 @@ class _WriterLock:
             "scope": self._scope,
             "created": _time.time(),
         }
-        p = self._entry_path(jvm)
+        p = Path(self._entry())
         out = fs.create(p, False)  # owner-unique name; cannot pre-exist
         try:
             out.write(bytearray(json.dumps(doc).encode()))
@@ -1581,7 +1376,9 @@ class _WriterLock:
             if age > self._lease:
                 fs.delete(st.getPath(), False)  # crashed writer — GC
                 continue
-            other = self._read_entry(jvm, fs, st.getPath())
+            other = storage.read_json(
+                self._spark, f"{self._dir()}/{name}"
+            )
             if other is None:
                 # unreadable LIVE entry (mid-write or torn): treat as
                 # conflicting — the safe direction
@@ -1601,12 +1398,14 @@ class _WriterLock:
         def beat(stop=self._stop):
             while not stop.wait(interval):
                 try:
-                    jvm, fs = _fs(self._spark, self._base)
-                    p = self._entry_path(jvm)
-                    doc = self._read_entry(jvm, fs, p)
+                    doc = storage.read_json(self._spark, self._entry())
                     if doc is None or doc.get("owner") != owner:
                         return  # entry lost/replaced — stop renewing
-                    fs.setTimes(p, int(_time.time() * 1000), -1)
+                    jvm, fs = storage.fs(self._spark, self._base)
+                    fs.setTimes(
+                        jvm.org.apache.hadoop.fs.Path(self._entry()),
+                        int(_time.time() * 1000), -1,
+                    )
                 except Exception:
                     pass  # skipped beat; the lease spans ~3 intervals
 
@@ -1624,11 +1423,10 @@ class _WriterLock:
             self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=10.0)
-        jvm, fs = _fs(self._spark, self._base)
-        p = self._entry_path(jvm)
-        doc = self._read_entry(jvm, fs, p)
+        doc = storage.read_json(self._spark, self._entry())
         if doc is not None and doc.get("owner") == self._owner:
-            fs.delete(p, False)
+            jvm, fs = storage.fs(self._spark, self._base)
+            fs.delete(jvm.org.apache.hadoop.fs.Path(self._entry()), False)
         elif exc_type is None:
             # never delete an entry we lost; a removed/replaced entry
             # means a concurrent writer may have interleaved with our
@@ -1728,7 +1526,7 @@ def _live_lock_owners(spark: SparkSession, base: str) -> set[str]:
     tell a live writer's staging/backup from a dead one's debris."""
     import time as _time
 
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     d = Path(f"{base}{_LOCK_DIR_SUFFIX}")
     out: set[str] = set()
@@ -1753,7 +1551,7 @@ def _find_swap_debris(
     owners with suffixed ``__staging-<o>``/``__premerge-<o>`` debris).
     Suffixed dirs whose owner holds a LIVE lock entry are a concurrent
     writer mid-swap — not debris."""
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     legacy = fs.exists(Path(f"{base}__staging")) or fs.exists(
         Path(f"{base}__premerge")
@@ -1807,7 +1605,7 @@ def _recover_owner_debris(
     of :func:`_recover_crashed_swap_locked`: restore backed-up
     partition directories whose target counterpart is missing (moved
     aside but not re-promoted), then delete backup and staging."""
-    jvm, fs = _fs(spark, base)
+    jvm, fs = storage.fs(spark, base)
     Path = jvm.org.apache.hadoop.fs.Path
     staging_p = Path(f"{base}__staging-{owner}")
     backup_p = Path(f"{base}__premerge-{owner}")
@@ -1819,7 +1617,7 @@ def _recover_owner_debris(
                 f"{base}__premerge-{owner} exists — scoped swaps never "
                 "move the root; refusing to guess, restore manually"
             )
-        _restore_missing_dirs(fs, Path, backup_p, target_p)
+        _restore_missing_dirs(spark, f"{base}__premerge-{owner}", base)
         fs.delete(backup_p, True)
     if fs.exists(staging_p):
         fs.delete(staging_p, True)
@@ -1858,7 +1656,7 @@ def _recover_crashed_swap_locked(
     A partition-scoped crash mid-promote can leave a mix of pre- and
     post-merge partitions after recovery; re-running the SAME merge
     batch heals it (upsert/SCD2 application is idempotent per key)."""
-    jvm, fs = _fs(spark, target_path)
+    jvm, fs = storage.fs(spark, target_path)
     Path = jvm.org.apache.hadoop.fs.Path
     base = target_path.rstrip("/")
     staging_p = Path(f"{base}__staging")
@@ -1876,9 +1674,7 @@ def _recover_crashed_swap_locked(
         elif fs.exists(Path(f"{base}__premerge/{_FULL_SWAP_MARKER}")):
             fs.delete(backup_p, True)
         else:
-            _restore_missing_dirs(
-                fs, jvm.org.apache.hadoop.fs.Path, backup_p, target_p
-            )
+            _restore_missing_dirs(spark, f"{base}__premerge", base)
             fs.delete(backup_p, True)
     if fs.exists(staging_p):
         if not fs.exists(target_p):
@@ -1907,7 +1703,7 @@ def _absorb_pending_deletes(
         materialize_deletes(spark, target_path, partition_by)
 
 
-def _restore_missing_dirs(fs, Path, src_dir, dst_dir) -> None:
+def _restore_missing_dirs(spark: SparkSession, src: str, dst: str) -> None:
     """Rename whole child DIRECTORIES of ``src_dir`` missing under
     ``dst_dir`` back into place; recurse where both sides have the
     directory (an intermediate partition level whose leaves diverge).
@@ -1916,14 +1712,15 @@ def _restore_missing_dirs(fs, Path, src_dir, dst_dir) -> None:
     only its pre-merge data files, which are skipped — the fix for the
     r11 blend bug where job-unique part-file names let pre-merge files
     rename into already-promoted directories as duplicate rows."""
-    for st in fs.listStatus(src_dir):
-        if not st.isDirectory():
+    jvm, fs = storage.fs(spark, src)
+    Path = jvm.org.apache.hadoop.fs.Path
+    for name, is_dir in storage.list_dir(spark, src):
+        if not is_dir:
             continue
-        dst_child = Path(f"{dst_dir.toString()}/{st.getPath().getName()}")
-        if not fs.exists(dst_child):
-            fs.rename(st.getPath(), dst_child)
+        if not storage.exists(spark, f"{dst}/{name}"):
+            fs.rename(Path(f"{src}/{name}"), Path(f"{dst}/{name}"))
         else:
-            _restore_missing_dirs(fs, Path, st.getPath(), dst_child)
+            _restore_missing_dirs(spark, f"{src}/{name}", f"{dst}/{name}")
 
 
 def _stage_verify_swap(
@@ -2036,7 +1833,7 @@ def _stage_verify_swap_locked(
     mispredicted would otherwise be silently dropped — abort with the
     snapshot untouched instead)."""
     spark = df.sparkSession
-    jvm, fs = _fs(spark, target_path)
+    jvm, fs = storage.fs(spark, target_path)
     Path = jvm.org.apache.hadoop.fs.Path
     base = target_path.rstrip("/")
     staging = f"{base}__staging{suffix}"
@@ -2304,8 +2101,6 @@ def merge_upsert(
 
     A missing target bootstraps from the batch's non-delete rows — the
     day-zero case."""
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
     if not keys:
         raise ValueError("merge_upsert needs at least one key column")
     if when_matched not in ("update", "none"):
@@ -2439,7 +2234,7 @@ def merge_upsert(
     else:
         upserts = source
 
-    if delete_mode == "merge_on_read" and _fs_exists(spark, target_path):
+    if delete_mode == "merge_on_read" and storage.exists(spark, target_path):
         from config_driven_pyspark_spark.operators.deletes import (
             delete_matching_dv,
         )
@@ -2500,7 +2295,7 @@ def merge_upsert(
     # alter_table step is a separate rewrite that must not run with
     # vectors pending.
     pending = None  # (entries, dv frame, nseg, dv_dirs | None)
-    if _fs_exists(spark, target_path):
+    if storage.exists(spark, target_path):
         from config_driven_pyspark_spark.operators import deletes as _dvm
 
         _b = target_path.rstrip("/")
@@ -2542,7 +2337,7 @@ def merge_upsert(
                     dv_dirs = sorted(r["d"] for r in drows)
             pending = (dv_entries, dv_frame, dv_nseg, dv_dirs)
 
-    if not _fs_exists(spark, target_path):
+    if not storage.exists(spark, target_path):
         if when_not_matched == "none":
             raise ValueError(
                 f"no snapshot at {target_path!r} and when_not_matched="
@@ -3275,8 +3070,6 @@ def scd2_merge(
     stay byte-identical. Partitioning by the SCD2 metadata columns
     (``is_current``/``valid_to``) still works but forces a full rewrite
     — every merge moves rows across those partitions by design."""
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
     if not keys:
         raise ValueError("scd2_merge needs at least one key column")
     spark = source.sparkSession
@@ -3360,7 +3153,7 @@ def scd2_merge(
             F.lit(True).alias("is_current"),
         )
 
-    if not _fs_exists(spark, target_path):
+    if not storage.exists(spark, target_path):
         boot = as_version(upserts)
         n = boot.count()
         # bootstrap has no prior snapshot to swap aside — plain write
@@ -3726,7 +3519,7 @@ _BATCH_MARKER = "_last_batch_id"
 
 
 def _read_batch_marker(spark: SparkSession, target_path: str) -> int | None:
-    data = _small_read(
+    data = storage.read_bytes(
         spark, f"{target_path.rstrip('/')}/{_BATCH_MARKER}"
     )
     if data is None:
@@ -3738,7 +3531,7 @@ def _read_batch_marker(spark: SparkSession, target_path: str) -> int | None:
 
 
 def _write_batch_marker(spark: SparkSession, dir_path: str, batch_id: int):
-    _small_write(
+    storage.write_bytes(
         spark, f"{dir_path.rstrip('/')}/{_BATCH_MARKER}",
         str(int(batch_id)).encode(),
     )
@@ -3790,8 +3583,6 @@ def incremental_agg(
     atomic-swap write as the other table maintainers."""
     import re as _re
 
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
     if not keys or not aggs:
         raise ValueError("incremental_agg needs keys and aggs")
     if partition_by and not set(partition_by) <= set(keys):
@@ -3829,12 +3620,12 @@ def incremental_agg(
     spark = batch.sparkSession
     _recover_crashed_swap(spark, target_path)
     _absorb_pending_deletes(spark, target_path, partition_by)
-    if batch_id is not None and _fs_exists(spark, target_path):
+    if batch_id is not None and storage.exists(spark, target_path):
         last = _read_batch_marker(spark, target_path)
         if last is not None and int(batch_id) <= last:
             # retried delivery of an already-folded batch — skip
             return spark.read.parquet(target_path)
-    if not _fs_exists(spark, target_path):
+    if not storage.exists(spark, target_path):
         writer = partial.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -3993,8 +3784,6 @@ def compact_table(
     Returns ``{files_before, files_after, n_partitions_compacted,
     n_rows, rewrite}``. A no-op (nothing over the threshold) touches
     nothing and reports itself as one."""
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
     if min_files < 2:
         raise ValueError("min_files must be >= 2 (1 file is compact)")
     if n_files < 1:
@@ -4029,13 +3818,11 @@ def compact_table(
         if sort_within:
             return df.sortWithinPartitions(*prefix, *sort_within)
         return df
-    if not _fs_exists(spark, target_path):
+    if not storage.exists(spark, target_path):
         raise ValueError(f"no snapshot at {target_path!r} to compact")
     _recover_crashed_swap(spark, target_path)
     # compaction is ALSO the designated deletion-vector materializer
     _absorb_pending_deletes(spark, target_path, partition_by)
-    jvm, fs = _fs(spark, target_path)
-    Path = jvm.org.apache.hadoop.fs.Path
     base = target_path.rstrip("/")
 
     def _rebuild_file_stats(fkeys: list[str]) -> None:
@@ -4060,11 +3847,11 @@ def compact_table(
         })
 
     def _n_parquet_files(rel: str) -> int:
-        p = Path(base if not rel else f"{base}/{rel}")
         return sum(
-            1 for st in fs.listStatus(p)
-            if not st.isDirectory()
-            and not st.getPath().getName().startswith(("_", "."))
+            1 for name, is_dir in storage.list_dir(
+                spark, base if not rel else f"{base}/{rel}"
+            )
+            if not is_dir and not name.startswith(("_", "."))
         )
 
     if not partition_by:
@@ -4445,14 +4232,12 @@ def _mutate_where(
     partition_by: list[str] | None,
 ) -> dict:
     """Shared core of :func:`delete_where` / :func:`update_where`."""
-    from config_driven_pyspark_spark.operators.similarity import _fs_exists
-
     if not condition:
         raise ValueError(
             "a WHERE condition is required — to drop or rewrite a whole "
             "table, overwrite it instead of mutating every row"
         )
-    if not _fs_exists(spark, target_path):
+    if not storage.exists(spark, target_path):
         raise ValueError(f"no snapshot at {target_path!r}")
     _recover_crashed_swap(spark, target_path)
     _absorb_pending_deletes(spark, target_path, partition_by)

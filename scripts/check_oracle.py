@@ -9,6 +9,7 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -68,7 +69,8 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # this checkout's engine, wherever the script is started from
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
@@ -78,6 +80,8 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # no progress bar: it shares the terminal with the OK/FAIL lines
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         # bounded writer-lock retry: a stale-but-unexpired lock entry
         # from a crashed sibling harness delays a table row instead of

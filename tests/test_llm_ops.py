@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from config_driven_pyspark_spark import storage
 from config_driven_pyspark_spark.functions import text as TX
 from config_driven_pyspark_spark.functions import vectors as V
 from config_driven_pyspark_spark.operators import dedup as D
@@ -2448,7 +2449,7 @@ def test_ivf_delete_tombstone_lifecycle(spark, embeddings, tmp_path):
     assert manifest["n_rows"] == before_manifest["n_rows"] + 2 - (
         len(dead) + 2
     )
-    assert not S._fs_exists(spark, f"{path}/tombstones")
+    assert not storage.exists(spark, f"{path}/tombstones")
     res3 = sorted(map(tuple, S.ivf_query_index(
         spark, path, q, k=5, nprobe=8
     ).collect()))
