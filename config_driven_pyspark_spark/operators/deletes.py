@@ -828,6 +828,7 @@ def materialize_deletes(
     ``{n_vectors, n_tombstones, n_after, rewrite}``."""
     from config_driven_pyspark_spark.operators import history as _hist
     from config_driven_pyspark_spark.operators.table import (
+        _KEEP,
         _MAX_SCOPED_PARTITIONS,
         _layout_matches,
         _read_batch_marker,
@@ -920,6 +921,8 @@ def materialize_deletes(
         touched_dirs=touched,
         marker_batch_id=root_marker,
         partition_markers=markers or None,
+        # dropping tombstoned rows leaves the key ranges valid-or-wide
+        sidecars=_KEEP,
         op="dv_materialize",
         # re-checked under the swap lock (ADVICE r14): a vector
         # committed after the listing above would be silently lost by

@@ -144,10 +144,7 @@ def enable_table_history(
 def disable_table_history(spark: SparkSession, target_path: str) -> None:
     """Drop retention AND every retained version (whole-directory
     delete). Mutating ops go back to deleting their backups."""
-    jvm, fs = storage.fs(spark, target_path)
-    fs.delete(
-        jvm.org.apache.hadoop.fs.Path(_hist_root(target_path)), True
-    )
+    storage.delete(spark, _hist_root(target_path), True)
 
 
 def _enabled_doc(spark: SparkSession, base: str) -> dict | None:
@@ -163,7 +160,6 @@ def begin_retention(
     number this swap will create (``.pending`` marker dropped so a
     crash leaves a trace and never a silently-wrong history), or None
     when history is not enabled for this table."""
-    jvm, fs = storage.fs(spark, base)
     doc = _enabled_doc(spark, base)
     if doc is None:
         return None
@@ -187,8 +183,7 @@ def begin_retention(
     # floor logic must treat as a lost entry.
     high = int(doc.get("high_water", 0))
     version = max(0, high, *complete, *incomplete) + 1
-    Path = jvm.org.apache.hadoop.fs.Path
-    # CAS allocation (r13): the pending marker's atomic createNewFile
+    # CAS allocation (r13): the pending marker's exclusive create
     # IS the compare-and-set — when two disjoint-scope writers race,
     # the loser's create fails and it takes the next number, so
     # concurrent versioned writers can never share a version. (While
@@ -196,7 +191,7 @@ def begin_retention(
     # transiently — the same honest gap semantics a crash leaves,
     # except the marker clears at commit.)
     for _ in range(1000):
-        if fs.createNewFile(Path(f"{hist}/v{version}.pending")):
+        if storage.create_new(spark, f"{hist}/v{version}.pending", b""):
             return version
         version += 1
     raise IOError(
@@ -209,13 +204,7 @@ def begin_retention(
 def abort_retention(spark: SparkSession, base: str, version: int) -> None:
     """In-process failure after ``begin_retention``: the swap rolled
     every rename back, so the pending marker is removable — no gap."""
-    jvm, fs = storage.fs(spark, base)
-    fs.delete(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{_hist_root(base)}/v{version}.pending"
-        ),
-        False,
-    )
+    storage.delete(spark, f"{_hist_root(base)}/v{version}.pending", False)
 
 
 def _nullable_schema(dt):
@@ -1158,12 +1147,14 @@ def restore_table(
     ∝ churn, not table size. A full-mode entry in the range (or a
     touched set past the scoped-partition cap) falls back to the full
     rewrite. Restoring to the current version is a no-op
-    (``rewrite: "none"``). The ``_key_stats`` sidecar is dropped (its
-    entries describe the replaced state) and restored partitions do
+    (``rewrite: "none"``). The key-stats sidecars are dropped before
+    the swap's first rename (their entries describe the replaced state,
+    which can be narrower than the restored one — a crash or a reader
+    after the rename must not see them), and restored partitions do
     not carry batch markers (the restored content predates them)."""
     from config_driven_pyspark_spark.operators.table import (
+        _DROP,
         _MAX_SCOPED_PARTITIONS,
-        _delete_key_stats,
         _recover_crashed_swap,
         _stage_verify_swap,
     )
@@ -1221,9 +1212,9 @@ def restore_table(
         + (" — rows in the diverged partitions)" if scope is not None
            else ")"),
         touched_dirs=sorted(scope) if scope is not None else None,
+        sidecars=_DROP,
         op="restore",
     )
-    _delete_key_stats(spark, base)
     return {
         "restored_version": version,
         "new_version": current + 1,
@@ -1263,8 +1254,6 @@ def vacuum_table_history(
     import time as _time
 
     base = target_path.rstrip("/")
-    jvm, fs = storage.fs(spark, base)
-    Path = jvm.org.apache.hadoop.fs.Path
     hist = _hist_root(base)
     complete, incomplete = _scan_entries(spark, hist)
     keep = set(complete)
@@ -1304,12 +1293,12 @@ def vacuum_table_history(
     for n in sorted(complete):
         if n in keep:
             continue
-        fs.delete(Path(f"{hist}/v{n}"), True)
+        storage.delete(spark, f"{hist}/v{n}", True)
         dropped += 1
     for n in sorted(incomplete):
         if n < cutoff:
-            fs.delete(Path(f"{hist}/v{n}"), True)
-            fs.delete(Path(f"{hist}/v{n}.pending"), False)
+            storage.delete(spark, f"{hist}/v{n}", True)
+            storage.delete(spark, f"{hist}/v{n}.pending", False)
     # archived deletion vectors (operators/deletes.py): a vector
     # materialized at version M is consulted only by reads of versions
     # BELOW M — once the readable floor reaches M, nothing can need it
@@ -1324,7 +1313,7 @@ def vacuum_table_history(
     arch = _dv_archive_root(base)
     for e in _list_dv(spark, arch):
         if e["mat"] is not None and e["mat"] <= floor_after:
-            fs.delete(Path(f"{arch}/{e['name']}"), True)
+            storage.delete(spark, f"{arch}/{e['name']}", True)
     return {"dropped": dropped, "kept": len(keep)}
 
 

@@ -21,29 +21,41 @@ The contract is the same on both routes:
 - :func:`list_dir` returns ``(name, is_dir)`` pairs, ``[]`` for an
   absent directory, and never the ``.<name>.crc`` sidecars Hadoop's
   checksummed local filesystem keeps.
+- :func:`delete` returns whether something was removed (False for an
+  absent path); the local route also removes a file's ``.crc`` sidecar.
+- :func:`create_new` creates a file only when it is absent, and says
+  whether it did.
 
-Mutations other than whole-file writes (rename, delete, mkdirs,
-createNewFile, setTimes) stay direct Hadoop calls on :func:`fs`.
+Other mutations (rename, mkdirs, setTimes) stay direct Hadoop calls on
+:func:`fs`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+from urllib.parse import urlsplit
 
 from pyspark.sql import SparkSession
 
 
+def _cache_key(path: str) -> str:
+    """``scheme://authority`` of ``path``, lower-cased as Hadoop's own
+    FileSystem cache keys it: two buckets or namenodes of one scheme are
+    two filesystems, while ``file:/x`` and ``file:///x`` (no authority)
+    share one. Schemeless paths key on "" — they resolve against
+    ``fs.defaultFS``, which need not be local."""
+    parts = urlsplit(path)
+    return f"{parts.scheme}://{parts.netloc}".lower() if parts.scheme else ""
+
+
 def _handle(spark: SparkSession, path: str) -> tuple:
     """(jvm, FileSystem, is-local) for ``path``, cached per session and
-    scheme: ``getFileSystem`` returns the same JVM object for a scheme
-    anyway, so repeating the lookup only adds round trips. Schemeless
-    paths key on "" (they resolve against ``fs.defaultFS``, which need
-    not be local)."""
-    head = path.split("/", 1)[0]
-    key = head[:-1] if head.endswith(":") and head[:-1].isalpha() else (
-        path.split("://", 1)[0] if "://" in path else ""
-    )
+    :func:`_cache_key`: ``getFileSystem`` returns the same JVM object for
+    a scheme and authority anyway, so repeating the lookup only adds
+    round trips."""
+    key = _cache_key(path)
     try:
         cache = spark._cdp_fs_cache
     except AttributeError:
@@ -150,6 +162,63 @@ def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
         out.close()
     hfs.delete(final, False)
     hfs.rename(tmp, final)
+
+
+def create_new(spark: SparkSession, path: str, data: bytes) -> bool:
+    """Create ``path`` holding ``data`` only when it does not exist yet;
+    False when it does. On the local route one exclusive ``open`` decides
+    between concurrent callers; the Hadoop route's non-overwriting
+    ``create`` is atomic where the filesystem makes it so (HDFS)."""
+    lp = local_path(spark, path)
+    if lp is not None:
+        os.makedirs(os.path.dirname(lp) or "/", exist_ok=True)
+        try:
+            fd = os.open(lp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            return False
+        with os.fdopen(fd, "wb") as fh:
+            fh.write(data)
+        return True
+    jvm, hfs = fs(spark, path)
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        out = hfs.create(p, False)
+    except Exception:
+        if hfs.exists(p):
+            return False
+        raise
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    return True
+
+
+def delete(spark: SparkSession, path: str, recursive: bool) -> bool:
+    """Remove the file or directory ``path`` (a non-empty directory only
+    when ``recursive``). False when it was absent, or when a recursive
+    delete left entries that a concurrent writer created meanwhile — as
+    Hadoop's own recursive delete reports it, without raising."""
+    lp = local_path(spark, path)
+    if lp is not None:
+        try:
+            if os.path.isdir(lp) and not os.path.islink(lp):
+                if not recursive:
+                    os.rmdir(lp)
+                    return True
+                shutil.rmtree(lp, ignore_errors=True)
+                return not os.path.lexists(lp)
+            os.remove(lp)
+        except (FileNotFoundError, NotADirectoryError):
+            return False
+        d, name = os.path.split(lp)
+        try:
+            os.remove(f"{d}/.{name}.crc")
+        except OSError:
+            pass
+        return True
+    jvm, hfs = fs(spark, path)
+    return bool(hfs.delete(jvm.org.apache.hadoop.fs.Path(path), recursive))
 
 
 def list_dir(spark: SparkSession, path: str) -> list[tuple[str, bool]]:

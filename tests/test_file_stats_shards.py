@@ -167,3 +167,47 @@ def test_file_stats_collect_cap_leaves_no_sidecar(spark, tmp_path, monkeypatch):
     # and the direct collect reports the overflow as None
     snap = spark.read.parquet(base)
     assert T._collect_file_key_stats(spark, base, snap.schema, ["k"]) is None
+
+
+def test_only_the_sidecar_functions_write_the_sidecars():
+    """Outside the functions that own the key-stats sidecars, no function
+    in ``table.py`` or ``history.py`` enters the sidecar mutex, writes or
+    collects the stats, or builds the per-partition doc: each op states
+    keep, drop or maintain to the swap, which applies it in one place."""
+    import ast
+    import pathlib
+
+    owners = {
+        "_write_key_stats", "_update_file_stats",
+        "_sidecars_before_promote", "_rebuild_sidecars",
+    }
+    banned = {
+        "_SidecarMutex", "_write_key_stats", "_write_file_stats",
+        "_collect_file_key_stats",
+    }
+    pkg = pathlib.Path(T.__file__).resolve().parent
+    offenders: list[str] = []
+
+    def walk(node, fn, name):
+        for child in ast.iter_child_nodes(node):
+            inner = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else fn
+            )
+            if inner not in owners:
+                callee = None
+                if isinstance(child, ast.Call):
+                    f = child.func
+                    callee = getattr(f, "id", None) or getattr(f, "attr", None)
+                builds_doc = isinstance(child, ast.Dict) and any(
+                    isinstance(k, ast.Constant) and k.value == "partitions"
+                    for k in child.keys
+                )
+                if callee in banned or builds_doc:
+                    offenders.append(f"{name}:{child.lineno} in {inner}")
+            walk(child, inner, name)
+
+    for name in ("table.py", "history.py"):
+        walk(ast.parse((pkg / name).read_text()), None, name)
+    assert offenders == []

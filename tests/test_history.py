@@ -465,6 +465,48 @@ def test_restore_is_partition_scoped(spark, tmp_path):
     assert H.table_current_version(spark, tgt) == 3
 
 
+def test_restore_drops_key_stats_before_the_swap(spark, tmp_path, monkeypatch):
+    """A scoped restore drops the key-stats sidecars before its first
+    rename. Here a crash right after the swap must not leave the entries
+    of the pre-restore state, which are narrower than the restored data:
+    a pruned read would miss the restored row and the next merge of its
+    key would abort on the staged-count check."""
+    from config_driven_pyspark_spark.operators import table as T
+
+    tgt = str(tmp_path / "t")
+    _seed(spark, tgt)  # status=P holds k = 0, 3, ..., 27
+    H.enable_table_history(spark, tgt, ["status"])
+    merge_upsert(
+        spark.createDataFrame(
+            [(27, "P", 0.0, True)],
+            "k int, status string, val double, gone boolean",
+        ),
+        tgt, ["k"], delete_col="gone", partition_by=["status"],
+    )
+    doc = T._read_key_stats(spark, tgt)
+    assert doc["partitions"]["status=P"]["k"]["max"] == 24
+
+    swap = T._stage_verify_swap
+
+    def crash_after_swap(*args, **kwargs):
+        swap(*args, **kwargs)
+        raise RuntimeError("crash after the swap")
+
+    monkeypatch.setattr(T, "_stage_verify_swap", crash_after_swap)
+    with pytest.raises(RuntimeError, match="crash after the swap"):
+        H.restore_table(spark, tgt, 0)
+    monkeypatch.undo()
+    assert spark.read.parquet(tgt).filter("k = 27").count() == 1
+    assert T.scan_table(spark, tgt, ["status"], key_eq={"k": 27}).count() == 1
+    stats = merge_upsert(
+        spark.createDataFrame(
+            [(27, "P", 1.0)], "k int, status string, val double"
+        ),
+        tgt, ["k"], partition_by=["status"],
+    )
+    assert stats["n_matched"] == 1 and stats["n_updated"] == 1
+
+
 def test_vacuum_age_based(spark, tmp_path):
     """older_than_seconds drops entries by commit age (chronological =
     oldest-first prefix, so readability still truncates contiguously);

@@ -121,3 +121,73 @@ def test_only_storage_touches_the_filesystem_directly():
         if banned.search(line)
     ]
     assert offenders == []
+
+
+def test_delete(spark, root):
+    base, disk = root
+    storage.write_bytes(spark, f"{base}/d/f.json", b"{}")
+    storage.write_bytes(spark, f"{base}/g.json", b"{}")
+    assert storage.delete(spark, f"{base}/g.json", False)
+    assert sorted(p.name for p in disk.iterdir()) == ["d"]  # no .g.json.crc left
+    assert not storage.delete(spark, f"{base}/g.json", False)  # absent
+    assert not storage.delete(spark, f"{base}/missing/deeper", True)
+    with pytest.raises(Exception):
+        storage.delete(spark, f"{base}/d", False)  # not empty
+    assert storage.delete(spark, f"{base}/d", True)
+    assert storage.list_dir(spark, base) == []
+
+
+def test_local_delete_drops_a_hadoop_checksum(spark, tmp_path):
+    storage.write_bytes(spark, (tmp_path / "m.json").as_uri(), b"{}")
+    assert (tmp_path / ".m.json.crc").exists()
+    assert storage.delete(spark, str(tmp_path / "m.json"), False)
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_handle_cache_keys_on_scheme_and_authority(spark, tmp_path, monkeypatch):
+    """Two buckets or namenodes of one scheme are two filesystems; paths
+    without an authority share one handle per scheme. The remote entries
+    are seeded, so no remote filesystem is contacted."""
+    monkeypatch.setattr(spark, "_cdp_fs_cache", {}, raising=False)
+    for p in (str(tmp_path / "a"), str(tmp_path / "b"), f"file:{tmp_path}/a",
+              (tmp_path / "b").as_uri()):
+        storage.fs(spark, p)
+    assert sorted(spark._cdp_fs_cache) == ["", "file://"]
+    seeded = {a: (None, object(), False) for a in ("hdfs://nn1:8020", "hdfs://nn2:8020")}
+    spark._cdp_fs_cache.update(seeded)
+    assert storage.fs(spark, "hdfs://nn1:8020/t")[1] is seeded["hdfs://nn1:8020"][1]
+    assert storage.fs(spark, "hdfs://NN2:8020/t")[1] is seeded["hdfs://nn2:8020"][1]
+    assert storage._cache_key("s3a://bucket-a/t") == "s3a://bucket-a"
+    assert storage._cache_key("s3a://bucket-b/t") == "s3a://bucket-b"
+
+
+def test_create_new(spark, root):
+    base, _ = root
+    assert storage.create_new(spark, f"{base}/m", b"first")
+    assert not storage.create_new(spark, f"{base}/m", b"second")
+    assert storage.read_bytes(spark, f"{base}/m") == b"first"
+
+
+def test_create_new_has_one_winner_among_threads(spark, tmp_path):
+    """The sidecar mutex is one ``create_new``: of many concurrent local
+    claims exactly one may win, or two writers would both rewrite the
+    stats docs."""
+    import threading
+
+    for attempt in range(20):
+        path = str(tmp_path / f"m{attempt}")
+        won: list[bool] = []
+        threads = [
+            threading.Thread(
+                target=lambda i=i: won.append(
+                    storage.create_new(spark, path, str(i).encode())
+                )
+            )
+            for i in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not any(t.is_alive() for t in threads)
+        assert len(won) == 8 and won.count(True) == 1
